@@ -70,19 +70,6 @@ object ScalingBench {
       // 8M rows); force a driver GC every 2 min so dead shuffles are freed
       .config("spark.cleaner.periodicGC.interval",
         sys.env.getOrElse("SPARK_GRAFT_PERIODIC_GC", "2min"))
-      // Round 8 (VERDICT r7 "next round" #2) — MEASURED AND REJECTED as a
-      // default: a 32M r0Batches=16 single-variable A/B (BENCH.md round 8)
-      // showed spark.rdd.compress=true shrinks the round-0 scratch crest
-      // only 55.2 → 52.5 GB (−5%) while costing +4% wall (zstd on every
-      // checkpoint block) — because the crest is dominated by CC/distinct
-      // SHUFFLE files, which are already codec-compressed, not by RDD
-      // checkpoint blocks (profiler: disk-spill 0.00 GB both legs). The
-      // r7 "pair checkpoints own the crest" attribution is hereby revised;
-      // the effective lever is removing the redundant exchange at the
-      // crest (ConnectedComponents.inputNormalized). Knob kept for
-      // environments whose checkpoints DO spill uncompressed.
-      .config("spark.rdd.compress",
-        sys.env.getOrElse("SPARK_GRAFT_RDD_COMPRESS", "false"))
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

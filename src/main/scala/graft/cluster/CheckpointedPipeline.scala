@@ -1,14 +1,16 @@
 package graft.cluster
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.feat.MinHash
 import graft.io.TableIO
 import graft.model.GraftConfig
 
-/** Resumable pipeline: the same phases as [[Pipeline]], with durable
-  * checkpoints and a per-partition ledger (north rule; SURVEY.md §7.4.5).
+/** Resumable pipeline: a per-partition featurize stage plus the ledger-
+  * backed state store for [[Pipeline]]'s driver loop (north rule;
+  * SURVEY.md §7.4.5). Clustering runs in `Pipeline.loop`; this object only
+  * saves each pass's state and loads the last one on resume.
   *
   *   workDir/
   *     features/part_id=k/   one parquet per INPUT partition (stage 1)
@@ -91,40 +93,20 @@ object CheckpointedPipeline {
         Map("config_seed" -> cfg.seed.toString, "m" -> cfg.m.toString,
             "sig_format" -> SigFormat, "shingle" -> shingleKey(cfg))))
     }
-    // Same hot/cold cache split as Pipeline.run (round-5 cache diet): the
-    // per-pass hot columns in MEMORY_AND_DISK, the caption column in its
-    // own DISK_ONLY cache. Both reads are column-pruned parquet scans of
-    // the stage-1 artifacts.
+    // The same caches as Pipeline.run, built by the same builder from two
+    // column-pruned parquet scans of the stage-1 artifacts.
     val features = spark.read.parquet(s"$workDir/features")
-      .select("row_id", "minhash", "phash")
-      .repartition(col("row_id")) // join-aligned cache, as in Pipeline.run
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = features.count()
-    val captions = spark.read.parquet(s"$workDir/features")
-      .select("row_id", "caption")
-      .repartition(col("row_id"))
-      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    // Same capLen aggregate as Pipeline.run — round 1 took capLen from
-    // an arbitrary first row (partition-order dependent), so resumed and
-    // non-resumed runs could derive different chunk-phase anchor params from
-    // the same data (VERDICT r1 "what's wrong" #1). Mirrors Pipeline.run's
-    // n==0 guard, with coalesce for the all-null-caption case (ADVICE r6).
-    val capLen =
-      if (n == 0) 0
-      else captions.agg(coalesce(max(length(col("caption"))), lit(0)))
-        .head().getInt(0)
+    val caches = Pipeline.buildCaches(spark, features.select("row_id", "minhash", "phash"),
+      features.select("row_id", "caption"), cfg)
 
     // ---- Stage 2-4: clustering rounds (round = resumable unit). ----
-    val stats = scala.collection.mutable.ArrayBuffer.empty[Pipeline.PhaseStat]
-    val roundsComputed = scala.collection.mutable.ArrayBuffer.empty[Int]
-    val roundsSkipped = scala.collection.mutable.ArrayBuffer.empty[Int]
-
     // The pass state is ONE relation (row_id, cluster_id, score); the small
     // sizes side-relation is recomputed on load (one job over the loaded
     // parquet). Ledger key = the pass's LAST macro round — pass boundaries
     // are deterministic functions of (config, corpus), so a resumed run
     // re-derives the same chunking and replays at most one torn pass.
-    def saveState(st: Pipeline.State, r: Int, stat: Pipeline.PhaseStat, bad: Int): Unit = {
+    def saveState(st: Pipeline.State, stat: Pipeline.PhaseStat, bad: Int): Unit = {
+      val r = stat.macroRound
       st.rel.write.mode("overwrite").parquet(s"$workDir/state/round=$r/rel")
       TableIO.writeEntry(workDir, TableIO.LedgerEntry(
         s"round_$r", "round", -1, stat.clusters,
@@ -141,7 +123,7 @@ object CheckpointedPipeline {
         .localCheckpoint()
       Pipeline.State(rel, sizes)
     }
-    def loadStat(r: Int): (Long, Long, Double, Int) = {
+    def loadStat(r: Int): (Pipeline.PhaseStat, Int) = {
       // clusters + singles + workRate + bad-round count (loop control) via
       // the structured ledger reader — a missing/malformed field aborts the
       // resume instead of silently defaulting loop state (ADVICE r3)
@@ -149,75 +131,20 @@ object CheckpointedPipeline {
       def metric(k: String): String = e.metrics.getOrElse(k,
         throw new IllegalStateException(
           s"ledger round_$r is missing required metric \"$k\" — format drift; refusing to resume"))
-      (e.rows, metric("singles").toLong, metric("workRate").toDouble,
-        metric("badRounds").toInt)
+      (Pipeline.PhaseStat("saved", r, -1L, -1L, e.rows, metric("singles").toLong,
+        metric("workRate").toDouble), metric("badRounds").toInt)
     }
 
-    val doneRounds = TableIO.completedKeys(workDir)
-      .filter(_.startsWith("round_")).map(_.stripPrefix("round_").toInt)
-    val lastDone = if (doneRounds.isEmpty) -1 else doneRounds.max
-
-    val keepShuffles: Set[Int] =
-      if (cfg.retireShuffles)
-        org.apache.spark.graft.ShuffleRetirement.liveIds(spark.sparkContext)
-      else Set.empty
-    def retire(): Unit = if (cfg.retireShuffles) {
-      org.apache.spark.graft.ShuffleRetirement
-        .retireAllExcept(spark.sparkContext, keepShuffles); ()
+    // resume from the last completed round's state, if any (stage 1 writes
+    // only features_* entries, so `done` still lists every round)
+    val lastDone = done.filter(_.startsWith("round_")).map(_.stripPrefix("round_").toInt)
+      .maxOption
+    val resume = lastDone.map { r =>
+      val (stat, bad) = loadStat(r)
+      (loadState(r), stat, bad)
     }
-
-    val ctl = Pipeline.RoundControl(cfg, n)
-    var st: Pipeline.State = null
-    var prevClusters = 0L
-    var prevSingles = 0L
-    var prevWorkRate = 1.0
-    var bad = 0
-    if (lastDone < 0) {
-      val (s0, stat0) = Pipeline.initialState(spark, features, captions, cfg, n, capLen, retire)
-      st = s0; stats += stat0
-      saveState(s0, 0, stat0, bad = 0)
-      roundsComputed += 0
-      prevSingles = stat0.singles
-      prevClusters = stat0.clusters
-    } else {
-      st = loadState(lastDone)
-      val (clusters, singles, wr, b) = loadStat(lastDone)
-      prevClusters = clusters
-      prevSingles = singles
-      prevWorkRate = wr
-      bad = b
-      roundsSkipped ++= (0 to lastDone)
-    }
-
-    var macroItr = math.max(lastDone, 0) + 1
-    var done2 =
-      if (lastDone < 1) prevSingles == 0
-      else if (cfg.maxMacroRounds > 0) prevWorkRate < cfg.minWorkRate || prevSingles == 0
-      else (bad >= ctl.allowedBadMacro && lastDone >= ctl.minMacro) || prevSingles == 0
-    while (!done2 && macroItr <= ctl.maxMacro) {
-      val t = ctl.passSize(macroItr, bad, prevClusters)
-      val rounds = macroItr until (macroItr + t)
-      val (st2, stat) = Pipeline.withSmallPassConf(spark,
-        prevClusters <= cfg.smallPassFocusRows) {
-        Pipeline.macroStep(spark, features, captions, st, cfg, rounds,
-          prevClusters, prevSingles, retire)
-      }
-      st = st2; stats += stat
-      val (nbad, stop) = ctl.stepPass(bad, rounds, prevSingles, stat)
-      bad = nbad
-      saveState(st2, rounds.last, stat, bad)
-      retire()
-      roundsComputed += rounds.last
-      done2 = stop || stat.singles == 0
-      prevSingles = stat.singles
-      prevClusters = stat.clusters
-      macroItr += t
-    }
-
-    (Pipeline.Result(
-      st.rel.select("row_id", "cluster_id"),
-      st.rel.where(col("score") > 0).select("row_id", "score"),
-      features, captions, stats.toSeq),
-      ResumeReport(fTodo, fDone, roundsComputed.toSeq, roundsSkipped.toSeq.sorted))
+    val res = Pipeline.loop(spark, caches, cfg, resume, saveState)
+    (res, ResumeReport(fTodo, fDone, res.stats.map(_.macroRound),
+      lastDone.toSeq.flatMap(0 to _)))
   }
 }

@@ -1,6 +1,7 @@
 package graft.cluster
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -59,21 +60,37 @@ object ConnectedComponents {
     * this bound are solved with the reference's own parent-array union-find
     * on the driver (`/root/reference/lsh_based_clustering.py:210-229`)
     * instead of the iterative star rounds. 200k edges ≈ 3.2 MB of longs —
-    * a bounded, scale-independent driver allocation (the same order as the
-    * judge-accepted 100k labelEdges probe in Pipeline.macroStep), while the
-    * star loop costs O(log n) Spark jobs of ~6 stages each, which dominates
-    * wall time on fixture-scale graphs by 10×+ (guide §1.2: fix the
-    * distributed algorithm first — here the fix is to not distribute a
-    * 3 MB problem). Override per session with
+    * a bounded, scale-independent driver allocation, while the star loop
+    * costs O(log n) Spark jobs of ~6 stages each, which dominates wall time
+    * on fixture-scale graphs by 10×+ (guide §1.2: fix the distributed
+    * algorithm first — here the fix is to not distribute a 3 MB problem).
+    * The same cap bounds round-0 CC and every macro pass's label-graph
+    * remap (Pipeline.macroStep). Override per session with
     * `spark.graft.cc.driverUnionFindMaxEdges` (0 disables the fast path);
     * beyond the cap the distributed loop runs exactly as before, so 100 TB
     * behavior is unchanged. */
   val DefaultDriverUnionFindMaxEdges: Long = 200000L
 
-  private def driverCap(spark: SparkSession): Long =
-    try spark.conf.get("spark.graft.cc.driverUnionFindMaxEdges",
-      DefaultDriverUnionFindMaxEdges.toString).toLong
-    catch { case _: NumberFormatException => DefaultDriverUnionFindMaxEdges }
+  /** The session's edge cap. An override above the largest probe size
+    * (`Int.MaxValue - 1`) is clamped to it, so it still takes the fast
+    * path, and a non-numeric one falls back to the default; both print a
+    * named warning. */
+  private def driverCap(spark: SparkSession): Long = {
+    val key = "spark.graft.cc.driverUnionFindMaxEdges"
+    val raw = spark.conf.get(key, DefaultDriverUnionFindMaxEdges.toString)
+    val maxCap = Int.MaxValue - 1L
+    raw.trim.toLongOption match {
+      case Some(cap) if cap > maxCap =>
+        System.err.println(s"[graft] CC CAP CLAMPED: $key=$raw exceeds the largest " +
+          s"driver probe; using $maxCap.")
+        maxCap
+      case Some(cap) => cap
+      case None =>
+        System.err.println(s"[graft] CC CAP IGNORED: $key=\"$raw\" is not an integer; " +
+          s"using the default $DefaultDriverUnionFindMaxEdges.")
+        DefaultDriverUnionFindMaxEdges
+    }
+  }
 
   /** Reference parent-array union-find with path compression + min-center
     * union (`:210-229,:413`) over a bounded edge list; returns every node
@@ -165,7 +182,7 @@ object ConnectedComponents {
     var curOwned = !inputNormalized
 
     val cap = driverCap(spark)
-    if (cap > 0 && cap <= Int.MaxValue - 1) {
+    if (cap > 0) {
       import spark.implicits._
       val probe = cur.as[(Long, Long)].limit(cap.toInt + 1).collect()
       if (probe.length <= cap) {
@@ -219,6 +236,15 @@ object ConnectedComponents {
     if (curOwned) graft.util.Checkpoints.unpersistCheckpoint(cur)
     out
   }
+
+  /** Whether a [[components]] result is empty. A driver-path result is a
+    * LocalRelation, read here with no Spark job; a star-loop result is a
+    * checkpoint, checked by one block scan. */
+  private[cluster] def isEmpty(comps: DataFrame): Boolean =
+    comps.queryExecution.analyzed.collectLeaves() match {
+      case Seq(local: LocalRelation) => local.data.isEmpty
+      case _ => comps.isEmpty
+    }
 
   /** Cheap convergence fingerprint: (count, xor of edge hashes) — xor is
     * order-independent and cannot overflow under ANSI mode. */

@@ -28,7 +28,7 @@ import graft.model.GraftConfig
   * Round-3 latency-floor fixes (VERDICT r2 #1/#3): pipeline state is ONE
   * relation `(row_id, cluster_id, score)` with a small cross-round
   * `(cluster_id, sz)` side relation (one checkpoint + one fewer join per
-  * pass); the zero-work branch derives from the bounded labelEdges probe
+  * pass); the zero-work branch derives from the label-graph CC's probe
   * (no separate verify-count job); and when the focus set is small,
   * CONSECUTIVE MACRO ROUNDS ARE FUSED into a single pass — round j of a
   * fused pass samples (singles ∪ rank-of-j reps) × round-j's L lane
@@ -63,6 +63,12 @@ object Pipeline {
     *           and reused for BOTH the pass stats and the next pass's focus
     *           (round 2 recomputed this aggregate twice per round). */
   final case class State(rel: DataFrame, sizes: DataFrame)
+
+  /** The run's two caches (see [[buildCaches]]), their row count, the
+    * typical caption length, and the shuffles that back them — the keep
+    * set of every shuffle retirement. */
+  private[cluster] final case class Caches(features: DataFrame, captions: DataFrame, n: Long,
+                                           capLen: Int, keep: Set[Int])
 
   /** (clusters, singles) off the small checkpointed sizes relation. */
   private def sizeStats(sizes: DataFrame): (Long, Long) = {
@@ -131,13 +137,20 @@ object Pipeline {
 
     /** Fold one finished pass (rounds `rounds`) into the control state.
       * Returns (new bad-round count, stop?). */
-    def stepPass(bad: Int, rounds: Seq[Int], prevSingles: Long, stat: PhaseStat): (Int, Boolean) =
-      if (cfg.maxMacroRounds > 0) (0, stat.workRate < cfg.minWorkRate)
-      else {
-        val diff = prevSingles - stat.singles
-        val nbad = if (diff <= rounds.size * workInBadMacro) bad + rounds.size else 0
-        (nbad, nbad >= allowedBadMacro && rounds.last >= minMacro)
-      }
+    def stepPass(bad: Int, rounds: Seq[Int], prevSingles: Long, stat: PhaseStat): (Int, Boolean) = {
+      val nbad =
+        if (cfg.maxMacroRounds > 0) 0
+        else if (prevSingles - stat.singles <= rounds.size * workInBadMacro) bad + rounds.size
+        else 0
+      (nbad, stopped(nbad, rounds.last, stat.workRate))
+    }
+
+    /** The stop decision after a pass ending at `lastRound` that left `bad`
+      * consecutive bad rounds and work rate `workRate` — also how a resumed
+      * run decides whether its last saved pass already stopped the run. */
+    def stopped(bad: Int, lastRound: Int, workRate: Double): Boolean =
+      if (cfg.maxMacroRounds > 0) workRate < cfg.minWorkRate
+      else bad >= allowedBadMacro && lastRound >= minMacro
   }
 
   /** Exact-duplicate collapse (round-2 scale fix). Web-scale corpora are
@@ -267,10 +280,65 @@ object Pipeline {
     } else None
   }
 
+  /** The hot and cold caches every pass joins, built once per run from
+    * `hot` (row_id, minhash, phash) and `cold` (row_id, caption) — both
+    * scans of the same source.
+    *
+    * Both are HASH-PARTITIONED ON row_id: every pass joins them 4-6 times
+    * on row_id (verify sides, focus filter), and the cached partitioning
+    * propagates through the projections, so those joins shuffle only the
+    * (much smaller) pair side — profiled at 8M rows, the per-round full-
+    * corpus re-shuffles dominated macro-round cost at both parallelism
+    * levels. Round-5 cache diet (VERDICT r4 #1): the hot cache carries ONLY
+    * the columns the per-pass scans touch (with 32-bit lanes: 186 of the
+    * round-4 456 B/row, CacheAudit), so at 32M+ rows it stops competing
+    * with execution memory. The caption column (92 B/row, read only by
+    * round-0 exact-dup/chunk hashing and the hamming-SURVIVOR side of each
+    * verify) lives in its own DISK_ONLY cache: columnar-compressed on
+    * scratch disk, OS-page-cache-hot, zero JVM-heap charge.
+    *
+    * DETERMINISM REQUIREMENT (ADVICE r5): the two scans must yield the same
+    * row set — a bare limit()/sample() without a checkpoint can hand the
+    * two caches different rows, and the inner verify joins would then drop
+    * rows with no error. Each cache materializes in ONE job that also folds
+    * in a bit_xor(row_id) signature and a row count (ADVICE r6: row-set
+    * differences with even multiplicity XOR-cancel, so the signature alone
+    * can pass while the caches disagree on cardinality); the run fails
+    * loudly on mismatch. The captions job also takes the typical caption
+    * length for the chunk phase. */
+  private[cluster] def buildCaches(spark: SparkSession, hot: DataFrame, cold: DataFrame,
+                                   cfg: GraftConfig): Caches = {
+    val features = hot.repartition(col("row_id")).persist(StorageLevel.MEMORY_AND_DISK)
+    val fRow = features.agg(
+      count(lit(1)), coalesce(expr("bit_xor(row_id)"), lit(0L))).head()
+    val n = fRow.getLong(0)
+    val captions = cold.repartition(col("row_id")).persist(StorageLevel.DISK_ONLY)
+    val capRow = captions.agg(
+      coalesce(expr("bit_xor(row_id)"), lit(0L)),
+      coalesce(max(length(col("caption"))), lit(0)),
+      count(lit(1))).head()
+    if (capRow.getLong(0) != fRow.getLong(1) || capRow.getLong(2) != n)
+      throw new IllegalStateException(
+        "Pipeline: the input yielded different row sets across its two cache " +
+        "scans (non-deterministic input, e.g. limit()/sample() without a " +
+        "checkpoint) — the hot features cache and the captions cache would " +
+        "disagree and verify joins would silently drop rows. Materialize the " +
+        "input (localCheckpoint/cache/parquet) before calling run.")
+    heapPressureWarning(spark, n)
+    // Shuffle retirement (round 4): snapshot the ids backing the two caches
+    // (their exchanges — the shuffles a future recompute of an evicted
+    // cache block could still need); everything created after this point
+    // is per-pass and provably dead at each pass boundary.
+    val keep =
+      if (cfg.retireShuffles) org.apache.spark.graft.ShuffleRetirement.liveIds(spark.sparkContext)
+      else Set.empty[Int]
+    Caches(features, captions, n, if (n == 0) 0 else capRow.getInt(1), keep)
+  }
+
   /** Phases 2+3: chunk rounds + global banding + first CC pass. */
-  def initialState(spark: SparkSession, features: DataFrame, captions: DataFrame,
-                   cfg: GraftConfig, n: Long, capLen: Int,
-                   retire: () => Unit = () => ()): (State, PhaseStat) = {
+  private def initialState(spark: SparkSession, c: Caches, cfg: GraftConfig,
+                           retire: () => Unit): (State, PhaseStat) = {
+    val (features, captions, n) = (c.features, c.captions, c.n)
     val rows = features.select("row_id")
 
     val (identityEdges, repIds, nDup) = collapseExactDups(features, captions, cfg.saltShards)
@@ -312,7 +380,7 @@ object Pipeline {
     // candidate in several batches just verifies more than once — CC is
     // insensitive to duplicate edges).
     val allHashes = Banding.bandHashCols(col("minhash"), cfg, 0) ++
-      ChunkPhase.hashCols(cfg, n, capLen)
+      ChunkPhase.hashCols(cfg, n, c.capLen)
     val nBatches = math.max(1, math.min(cfg.round0Batches, allHashes.size))
     val batchEdges = allHashes.grouped(
       (allHashes.size + nBatches - 1) / nBatches).toSeq.map { batch =>
@@ -378,10 +446,10 @@ object Pipeline {
     * focus set -> per-round banding branches fused into one explode ->
     * verify -> incremental CC. Returns the new state and the pass's stat
     * (attributed to `rounds.last`). */
-  def macroStep(spark: SparkSession, features: DataFrame, captions: DataFrame, st: State,
-                cfg: GraftConfig, rounds: Seq[Int],
-                prevClusters: Long, prevSingles: Long,
-                retire: () => Unit = () => ()): (State, PhaseStat) = {
+  private def macroStep(spark: SparkSession, c: Caches, st: State, cfg: GraftConfig,
+                        rounds: Seq[Int], prevClusters: Long, prevSingles: Long,
+                        retire: () => Unit): (State, PhaseStat) = {
+    val (features, captions) = (c.features, c.captions)
     // Focus = all singles + score-ranked reps of every multi cluster, the
     // reference's cycling r (`:623-628`): round j samples rank (j-1) %
     // reps_per_cluster. ONE wide exchange: state joins the checkpointed
@@ -431,87 +499,66 @@ object Pipeline {
     }.reduce(_ unionAll _)
     val cand = Banding.chainPairs(buckets, cfg.saltShards)
     // EAGER localCheckpoint, not persist (ADVICE r4): `verified` stays live
-    // across this pass's early retire() below, and a persisted-only cache
+    // across this pass's early retirement below, and a persisted-only cache
     // would keep shuffle-backed lineage it could no longer recompute
     // through once those shuffles are retired. The checkpoint job IS the
     // pass's first materializing action (it runs the whole verify
-    // pipeline); the probe and count below are then cheap block scans.
+    // pipeline); the count and the CC probe below are then cheap scans.
     val verified = VerifyPairs.verify(
       cand, features, captions, cfg.q, cfg.sdHigh, cfg.sdLow,
       cfg.distanceThreshold, cfg.hammingThreshold, cfg.minLcs)
       .localCheckpoint()
+    val nVerified = verified.count() // cheap: scans the checkpoint blocks
+    focusFeatures.unpersist()
 
-    // Incremental union-find on the LABEL graph: new pairs touch existing
-    // clusters, so mapping endpoints to their current labels gives a graph
-    // with ≤ |verified| edges — orders of magnitude smaller than re-running
-    // CC over all assignment edges. The bounded probe (≤ 100k+1 label
-    // edges) scans the just-written verified checkpoint and decides the
-    // zero-work branch (it replaced round 2's separate verify-count job,
-    // VERDICT r2 #1); st.rel is hash-partitioned on row_id, so only the
-    // small verified side shuffles here.
+    // Incremental CC on the LABEL graph: new pairs touch existing clusters,
+    // so mapping endpoints to their current labels gives a graph with
+    // ≤ |verified| edges — orders of magnitude smaller than re-running CC
+    // over all assignment edges. st.rel is hash-partitioned on row_id, so
+    // only the small verified side shuffles here. The edges are built
+    // (a < b)-normalized and distinct, so CC's probe scans them directly
+    // (it replaced round 2's separate verify-count job, VERDICT r2 #1);
+    // small label graphs then union-find on the driver (the reference's
+    // own merge structure, :399-418) and large ones run the star loop.
+    // CC's retire after its probe is this pass's early retirement: with
+    // `verified` checkpointed (lineage truncated), the pass's candidate-
+    // generation shuffles (explode exchange, chain windows, pair distinct,
+    // focus joins) are provably dead — everything below reads only the
+    // verified checkpoint, the features cache and the checkpointed state —
+    // so the state-update jobs and the next pass never sit on top of this
+    // pass's widest intermediate.
     val la = st.rel.select(col("row_id").as("a"), col("cluster_id").as("la"))
     val lb = st.rel.select(col("row_id").as("b"), col("cluster_id").as("lb"))
     val labelEdges = verified.join(la, "a").join(lb, "b")
       .where(col("la") =!= col("lb"))
-      .select(col("la").as("a"), col("lb").as("b")).distinct()
-    val labelEdgeCap = 100000
-    val probe = labelEdges.limit(labelEdgeCap + 1).collect()
-    val nVerified = verified.count() // cheap: scans the checkpoint blocks
-    focusFeatures.unpersist()
-    // Early retirement: with `verified` checkpointed (lineage truncated),
-    // the pass's candidate-generation shuffles (explode exchange, chain
-    // windows, pair distinct, focus joins) are provably dead — everything
-    // below reads only the verified checkpoint, the features cache and the
-    // checkpointed state. Freeing them NOW means the state-update jobs and
-    // the next pass never sit on top of this pass's widest intermediate.
-    retire()
+      .select(least(col("la"), col("lb")).as("a"), greatest(col("la"), col("lb")).as("b"))
+      .distinct()
+    val comps = ConnectedComponents.components(spark, labelEdges, retire = retire,
+      inputNormalized = true)
 
-    if (probe.isEmpty) {
+    if (ConnectedComponents.isEmpty(comps)) {
       // no cluster merges this pass — skip the state-update jobs entirely.
       // (Documented divergence: intra-cluster score bumps from already-
       // co-clustered verified pairs are dropped in this branch; they only
       // shuffle rep ranking, and rank cycling explores reps regardless.)
       graft.util.Checkpoints.unpersistCheckpoint(verified)
+      graft.util.Checkpoints.unpersistCheckpoint(comps)
       (st, PhaseStat("final", rounds.last, -1L, nVerified, prevClusters,
         prevSingles, 0.0))
     } else {
-      // Small label graphs union-find on the driver (the reference's own
-      // merge structure, :399-418); large ones fall back to distributed CC.
-      val remapIsSmall = probe.length <= labelEdgeCap
-      val remap: DataFrame =
-        if (remapIsSmall) {
-          val edges = probe.map(r => (r.getLong(0), r.getLong(1)))
-          val parent = scala.collection.mutable.Map.empty[Long, Long]
-          def find(x: Long): Long = {
-            var r0 = x
-            while (parent.getOrElse(r0, r0) != r0) r0 = parent(r0)
-            var c = x
-            while (parent.getOrElse(c, c) != r0) { val nx = parent(c); parent(c) = r0; c = nx }
-            r0
-          }
-          edges.foreach { case (x, y) =>
-            val (px, py) = (find(x), find(y))
-            if (px != py) parent(math.max(px, py)) = math.min(px, py) // min-center (:413)
-          }
-          val pairs = parent.keys.map(k => (k, find(k))).filter(p => p._1 != p._2).toSeq
-          import spark.implicits._
-          pairs.toDF("cluster_id", "new_cluster_id")
-        } else {
-          ConnectedComponents.components(spark, labelEdges, retire = retire)
-            .where(col("row_id") =!= col("cluster_id"))
-            .select(col("row_id").as("cluster_id"), col("cluster_id").as("new_cluster_id"))
-        }
-      // broadcast hints only when the size is actually known to be small —
-      // the driver-UF remap (≤ ~2·labelEdgeCap rows) and a bounded score
-      // delta; an unbounded hint bypasses Spark's broadcast safety (ADVICE)
-      val remapJ = if (remapIsSmall) broadcast(remap) else remap
+      // the driver path's remap is a LocalRelation the planner knows is
+      // small (it broadcasts it unhinted); a star-loop remap is unbounded
+      val remap = comps.where(col("row_id") =!= col("cluster_id"))
+        .select(col("row_id").as("cluster_id"), col("cluster_id").as("new_cluster_id"))
+      // the score delta is hinted only when its size is bounded; an
+      // unbounded hint bypasses Spark's broadcast safety (ADVICE)
       val deltas = endpointCounts(verified).withColumnRenamed("score", "delta")
       val deltasJ = if (deltasBroadcastable(nVerified)) broadcast(deltas) else deltas
 
       // EAGER: materialize the new state while `verified` is still cached
       // and BEFORE the superseded checkpoints are dropped below.
       val rel = st.rel
-        .join(remapJ, Seq("cluster_id"), "left")
+        .join(remap, Seq("cluster_id"), "left")
         .join(deltasJ, Seq("row_id"), "left")
         .select(col("row_id"),
           coalesce(col("new_cluster_id"), col("cluster_id")).as("cluster_id"),
@@ -522,7 +569,7 @@ object Pipeline {
       // old one aggregated through the remap — O(clusters) rows instead of
       // the full n-row groupBy-shuffle the round-3 pass paid here.
       val sizes = st.sizes
-        .join(remapJ, Seq("cluster_id"), "left")
+        .join(remap, Seq("cluster_id"), "left")
         .groupBy(coalesce(col("new_cluster_id"), col("cluster_id")).as("cluster_id"))
         .agg(sum("sz").as("sz"))
         .localCheckpoint()
@@ -542,81 +589,52 @@ object Pipeline {
     }
   }
 
+  /** 1. Featurize -- bytes column pruned from the scan (SURVEY.md par.4).
+    * The shingle array is consumed inside featurize (minhash/simhash);
+    * verification recomputes caption grams at the verify site, so the
+    * cached relation carries ~10x less per row without it. Captions come
+    * from a second scan of the SOURCE (caption is a source column; row_id
+    * is a hash of image_id), not a second featurize pass — no double
+    * shingle/signature compute — so `images` must be deterministic
+    * ([[buildCaches]]). Then the shared driver loop ([[loop]]). */
   def run(spark: SparkSession, images: DataFrame, cfg: GraftConfig = GraftConfig()): Result = {
-    // 1. Featurize -- bytes column pruned from the scan (SURVEY.md par.4).
-    // The shingle array is consumed inside featurize (minhash/simhash);
-    // verification recomputes caption grams at the verify site, so the
-    // cached relation carries ~10x less per row without it.
-    // The cache is HASH-PARTITIONED ON row_id: every pass joins this
-    // relation 4-6 times on row_id (verify sides, focus filter), and the
-    // cached partitioning propagates through the projections, so those
-    // joins shuffle only the (much smaller) pair side — profiled at 8M
-    // rows, the per-round full-corpus re-shuffles dominated macro-round
-    // cost at both parallelism levels.
-    // Round-5 features-cache diet (VERDICT r4 #1): the hot cache carries
-    // ONLY the columns the per-pass scans touch — row_id, phash, minhash
-    // (with 32-bit lanes: 186 of the round-4 456 B/row, CacheAudit) — so at
-    // 32M+ rows it stops competing with execution memory. The caption
-    // column (92 B/row, read only by round-0 exact-dup/chunk hashing and
-    // the hamming-SURVIVOR side of each verify) lives in its own DISK_ONLY
-    // cache: columnar-compressed on scratch disk, OS-page-cache-hot, zero
-    // JVM-heap charge. Captions come from a second scan of the SOURCE
-    // (caption is a source column; row_id is a hash of image_id), not a
-    // second featurize pass — no double shingle/signature compute.
-    // DETERMINISM REQUIREMENT (ADVICE r5): because of that second scan, the
-    // `images` plan must yield the same row set on every execution — a bare
-    // limit()/sample() without a checkpoint can hand the two caches
-    // different rows, and the inner verify joins would then drop rows with
-    // no error. Both materialization jobs below fold in a bit_xor(row_id)
-    // signature and the run fails loudly on mismatch.
-    val features = MinHash.featurize(spark, images, cfg).toDF()
+    val hot = MinHash.featurize(spark, images, cfg).toDF()
       .drop("shingles", "caption", "simhash")
-      .repartition(col("row_id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // one job: materialize the hot cache AND collect n + the id signature
-    val fRow = features.agg(
-      count(lit(1)), coalesce(expr("bit_xor(row_id)"), lit(0L))).head()
-    val n = fRow.getLong(0)
-    val idSig = fRow.getLong(1)
-    val captions = images.select(
-        graft.feat.RowIds.rowIdCol(col("image_id")).as("row_id"), col("caption"))
-      .repartition(col("row_id")) // align with the hot cache: verify joins both
-      .persist(StorageLevel.DISK_ONLY)
-    // one job: materialize the captions cache AND collect typical length +
-    // the id signature + row count for the determinism guard. The count is
-    // part of the check (ADVICE r6): row-set differences with even
-    // multiplicity XOR-cancel in bit_xor, so the signature alone can pass
-    // while the two caches disagree on cardinality.
-    val capRow = captions.agg(
-      coalesce(expr("bit_xor(row_id)"), lit(0L)),
-      coalesce(max(length(col("caption"))), lit(0)),
-      count(lit(1))).head()
-    if (capRow.getLong(0) != idSig || capRow.getLong(2) != n)
-      throw new IllegalStateException(
-        "Pipeline.run: the images plan yielded different row sets across its " +
-        "two scans (non-deterministic input, e.g. limit()/sample() without a " +
-        "checkpoint) — the hot features cache and the captions cache would " +
-        "disagree and verify joins would silently drop rows. Materialize the " +
-        "input (localCheckpoint/cache/parquet) before calling run.")
-    val capLen = if (n == 0) 0 else capRow.getInt(1)
-    heapPressureWarning(spark, n)
+    val cold = images.select(
+      graft.feat.RowIds.rowIdCol(col("image_id")).as("row_id"), col("caption"))
+    loop(spark, buildCaches(spark, hot, cold, cfg), cfg)
+  }
 
-    // Shuffle retirement (round 4): snapshot the ids backing the features
-    // and captions caches (their exchanges — the shuffles a future
-    // recompute of an evicted cache block could still need); everything
-    // created after this point is per-pass and provably dead at each pass
-    // boundary.
-    val keepShuffles: Set[Int] =
-      if (cfg.retireShuffles)
-        org.apache.spark.graft.ShuffleRetirement.liveIds(spark.sparkContext)
-      else Set.empty
+  /** The driver loop — the reference's `run()` (`:697-711`): round 0, then
+    * fused macro-round passes over the focus set (C5/C6) until
+    * [[RoundControl]] stops the run (budget, bad-round patience and pass
+    * width scale with n). Every pass is handed to `save` with the bad-round
+    * count it left, then the pass's shuffles are retired.
+    *
+    * `resume` = (state, stat, bad-round count) as saved after pass
+    * `stat.macroRound`: the loop skips round 0 and continues at the next
+    * macro round, exactly as an uninterrupted run would (pass boundaries
+    * are deterministic functions of config and corpus). The returned stats
+    * cover only the passes this call ran. */
+  private[cluster] def loop(spark: SparkSession, c: Caches, cfg: GraftConfig,
+      resume: Option[(State, PhaseStat, Int)] = None,
+      save: (State, PhaseStat, Int) => Unit = (_, _, _) => ()): Result = {
     def retire(): Unit = if (cfg.retireShuffles) {
       org.apache.spark.graft.ShuffleRetirement
-        .retireAllExcept(spark.sparkContext, keepShuffles); ()
+        .retireAllExcept(spark.sparkContext, c.keep); ()
+    }
+    val stats = scala.collection.mutable.ArrayBuffer.empty[PhaseStat]
+    def timed(step: => (State, PhaseStat)): (State, PhaseStat) = {
+      val t = System.nanoTime()
+      val (st, stat) = step
+      (st, stat.copy(seconds = (System.nanoTime() - t) / 1e9))
+    }
+    def commit(st: State, stat: PhaseStat, bad: Int): Unit = {
+      stats += stat
+      save(st, stat, bad)
+      retire()
     }
 
-    val stats = scala.collection.mutable.ArrayBuffer.empty[PhaseStat]
-    val tInit = System.nanoTime()
     // Round-8 NEGATIVE result, kept on record (guide §1.2 — measure, don't
     // assume): wrapping round 0 in the small-pass conf at fixture scale
     // (AQE off + 16 static shuffle partitions) made round 0 itself faster
@@ -627,41 +645,23 @@ object Pipeline {
     // on a few-thousand-row relation. Round 0 therefore stays on the
     // session conf; only the late macro passes flip (below), as measured
     // in round 3.
-    var (st, stat0) = initialState(spark, features, captions, cfg, n, capLen, retire)
-    stats += stat0.copy(seconds = (System.nanoTime() - tInit) / 1e9)
-    retire()
-
-    // 4. Final clustering: fused macro-round passes over the focus set
-    // (C5/C6) — budget, bad-round patience and pass width scale with n
-    // (RoundControl).
-    val ctl = RoundControl(cfg, n)
-    var macroItr = 1
-    var bad = 0
-    var done = false
-    var prevSingles = stats.last.singles
-    var prevClusters = stats.last.clusters
-    while (!done && macroItr <= ctl.maxMacro) {
-      if (prevSingles == 0) { done = true }
-      else {
-        val t = ctl.passSize(macroItr, bad, prevClusters)
-        val rounds = macroItr until (macroItr + t)
-        val tR = System.nanoTime()
-        val (st2, stat0) = withSmallPassConf(spark,
-          prevClusters <= cfg.smallPassFocusRows) {
-          macroStep(spark, features, captions, st, cfg, rounds, prevClusters,
-            prevSingles, retire)
-        }
-        st = st2
-        val stat = stat0.copy(seconds = (System.nanoTime() - tR) / 1e9)
-        stats += stat
-        retire()
-        val (nbad, stop) = ctl.stepPass(bad, rounds, prevSingles, stat)
-        bad = nbad
-        done = stop
-        prevSingles = stat.singles
-        prevClusters = stat.clusters
-        macroItr += t
-      }
+    var (st, last, bad) = resume.getOrElse {
+      val (st0, stat0) = timed(initialState(spark, c, cfg, retire))
+      commit(st0, stat0, 0)
+      (st0, stat0, 0)
+    }
+    val ctl = RoundControl(cfg, c.n)
+    var done = last.macroRound > 0 && ctl.stopped(bad, last.macroRound, last.workRate)
+    while (!done && last.singles > 0 && last.macroRound < ctl.maxMacro) {
+      val from = last.macroRound + 1
+      val rounds = from until (from + ctl.passSize(from, bad, last.clusters))
+      val (st2, stat) = timed(
+        withSmallPassConf(spark, last.clusters <= cfg.smallPassFocusRows) {
+          macroStep(spark, c, st, cfg, rounds, last.clusters, last.singles, retire)
+        })
+      val (nbad, stop) = ctl.stepPass(bad, rounds, last.singles, stat)
+      commit(st2, stat, nbad)
+      st = st2; last = stat; bad = nbad; done = stop
     }
 
     Result(
@@ -671,6 +671,6 @@ object Pipeline {
       // score 0 and is absent here — downstream consumers get a slightly
       // sparser scores relation than a sequential per-round run would emit.
       st.rel.where(col("score") > 0).select("row_id", "score"),
-      features, captions, stats.toSeq)
+      c.features, c.captions, stats.toSeq)
   }
 }

@@ -35,9 +35,10 @@ import org.apache.spark.{MapOutputTrackerMaster, SparkContext}
   * eagerly localCheckpoint'ed — lineage truncated, so no plan path through
   * a retired shuffle exists — or (b) backed solely by keep-set shuffles
   * (the features cache). This holds at pass boundaries AND at the two
-  * mid-pass sites (the round-0 batch loop and macroStep's early retire):
-  * `verified`, `identityEdges` and `repIds` are checkpoints, not persisted
-  * caches, precisely so those sites satisfy the contract (ADVICE r4).
+  * mid-pass sites (the round-0 batch loop, and the label-graph CC's
+  * post-probe retire inside macroStep): `verified`, `identityEdges` and
+  * `repIds` are checkpoints, not persisted caches, precisely so those
+  * sites satisfy the contract (ADVICE r4).
   *
   * Executor-loss caveat (real clusters): localCheckpoint blocks themselves
   * are not fault-tolerant — Spark documents that losing an executor loses

@@ -1,0 +1,62 @@
+package graft
+
+import java.nio.file.Files
+
+import graft.cluster.{CheckpointedPipeline, Pipeline}
+import graft.gen.SyntheticCorpus
+import graft.io.TableIO
+import graft.model.GraftConfig
+
+/** Differential specs for the single driver loop: the in-memory and the
+  * ledger-backed entry points, and the two CC paths of the label-graph
+  * remap, must produce the same clustering pass for pass. Min-row_id
+  * labels are canonical, so assignments compare exactly. */
+class DriverLoopSpec extends SparkSpec {
+  import spark.implicits._
+
+  private val capKey = "spark.graft.cc.driverUnionFindMaxEdges"
+
+  private lazy val imagesPath: String = {
+    val path = Files.createTempDirectory("graft_driver_loop").resolve("images").toString
+    val gen = SyntheticCorpus.generate(spark, SyntheticCorpus.GenConfig(groups = 60)).cache()
+    TableIO.writeImages(SyntheticCorpus.imagesOf(gen), path, numParts = 4)
+    gen.unpersist()
+    path
+  }
+
+  private def assignOf(res: Pipeline.Result): Map[Long, Long] = {
+    val a = res.assign.as[(Long, Long)].collect().toMap
+    res.features.unpersist(); res.captions.unpersist()
+    a
+  }
+
+  test("Pipeline.run and CheckpointedPipeline.run agree on assign and every PhaseStat; durable passes are timed") {
+    val cfg = GraftConfig(seed = 7L)
+    val straight = Pipeline.run(spark, spark.read.parquet(imagesPath), cfg)
+    val workDir = Files.createTempDirectory("graft_driver_loop_wd").toString
+    val (durable, rep) = CheckpointedPipeline.run(spark, imagesPath, workDir, cfg)
+    val untimed = (r: Pipeline.Result) => r.stats.map(_.copy(seconds = 0.0))
+    assert(untimed(durable) == untimed(straight))
+    assert(rep.roundsComputed == straight.stats.map(_.macroRound))
+    assert(durable.stats.forall(_.seconds > 0), durable.stats)
+    assert(assignOf(durable) == assignOf(straight))
+  }
+
+  test("label-graph remap through the star loop: driverUnionFindMaxEdges 0 gives the identical assign") {
+    // two band rounds and one chunk round leave round 0 incomplete, so the
+    // fixed macro passes merge clusters and the remap is non-empty
+    val cfg = GraftConfig(seed = 7L, bandRounds = 2, chunkRounds = 1, maxMacroRounds = 3)
+    val images = spark.read.parquet(imagesPath)
+    val viaDriver = Pipeline.run(spark, images, cfg)
+    val statsDriver = viaDriver.stats.map(_.copy(seconds = 0.0))
+    assert(statsDriver.sliding(2).exists(p => p(1).macroRound > 0 && p(1).clusters < p(0).clusters),
+      s"no macro pass merged clusters: $statsDriver")
+    val assignDriver = assignOf(viaDriver)
+    spark.conf.set(capKey, "0")
+    try {
+      val viaStar = Pipeline.run(spark, images, cfg)
+      assert(viaStar.stats.map(_.copy(seconds = 0.0)) == statsDriver)
+      assert(assignOf(viaStar) == assignDriver)
+    } finally spark.conf.unset(capKey)
+  }
+}

@@ -1,0 +1,102 @@
+package graft
+
+import java.nio.file.Files
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec, SparkPlan}
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.functions._
+
+import graft.feat.MinHash
+import graft.gen.SyntheticCorpus
+import graft.io.TableIO
+import graft.lsh.Banding
+import graft.model.GraftConfig
+
+/** The plan shapes the engine's cost model rests on (SURVEY.md §4: what
+  * Catalyst gives us), asserted on the physical plans. Planning runs with
+  * AQE off so the static plan holds every exchange. */
+class PlanShapeSpec extends SparkSpec {
+  import spark.implicits._
+
+  private lazy val images: DataFrame = {
+    val path = Files.createTempDirectory("graft_plan_shape").resolve("images").toString
+    val gen = SyntheticCorpus.generate(spark, SyntheticCorpus.GenConfig(groups = 20))
+    TableIO.writeImages(SyntheticCorpus.imagesOf(gen), path, numParts = 4)
+    spark.read.parquet(path)
+  }
+
+  private def plan(df: DataFrame): SparkPlan = {
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try df.queryExecution.executedPlan
+    finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+  }
+
+  private def scans(p: SparkPlan): Seq[FileSourceScanExec] =
+    p.collect { case s: FileSourceScanExec => s }
+
+  /** The nodes below `p` down to, and including, the next exchanges —
+    * what one shuffle's map side runs. */
+  private def mapSide(p: SparkPlan): Seq[SparkPlan] = p.children.flatMap {
+    case e: ShuffleExchangeExec => Seq(e)
+    case c => c +: mapSide(c)
+  }
+
+  private def isPartialAgg(p: SparkPlan): Boolean = p match {
+    case a: HashAggregateExec => a.aggregateExpressions.exists(_.mode == Partial)
+    case _ => false
+  }
+
+  test("featurize scan prunes the payload bytes") {
+    val s = scans(plan(MinHash.featurize(spark, images, GraftConfig()).toDF()))
+    assert(s.nonEmpty)
+    s.foreach(x => assert(!x.requiredSchema.fieldNames.contains("bytes"), x.requiredSchema))
+  }
+
+  test("a part_id = 2 read carries a partition filter") {
+    val s = scans(plan(images.where(col("part_id") === 2).select("image_id")))
+    assert(s.size == 1)
+    assert(s.head.partitionFilters.nonEmpty, s.head)
+  }
+
+  test("banding: the exploded L×n relation crosses exactly one exchange, the (band_hash, salt) window") {
+    val cfg = GraftConfig()
+    val features = MinHash.featurize(spark, images, cfg).toDF()
+    val p = plan(Banding.candidatePairs(features, cfg, 0))
+    val fed = p.collect {
+      case e: ShuffleExchangeExec if mapSide(e).exists(_.isInstanceOf[GenerateExec]) => e
+    }
+    // the other exchange the explode feeds carries partial-aggregate shard
+    // minima (≤ saltShards rows per bucket), not the L×n rows
+    val (minima, wide) = fed.partition(e => mapSide(e).exists(isPartialAgg))
+    assert(wide.size == 1, s"exploded rows cross ${wide.size} exchanges:\n$p")
+    val keys = wide.head.outputPartitioning match {
+      case h: HashPartitioning => h.expressions.collect { case a: Attribute => a.name }
+      case other => fail(s"window exchange is not hash-partitioned: $other")
+    }
+    assert(keys == Seq("band_hash", "salt"))
+    assert(minima.size == 1, s"expected one shard-minima exchange:\n$p")
+  }
+
+  test("q1_agg pushes its projection into the scan and aggregates partially before the exchange") {
+    // q1_agg has no predicate, so its scan pushes columns, not filters
+    val dir = Files.createTempDirectory("graft_plan_q1").toString
+    Seq(("A", "F", 1.0, 10.0, 0.1, 0.0, 1L, "x"), ("N", "O", 2.0, 20.0, 0.2, 0.0, 2L, "y"))
+      .toDF("l_returnflag", "l_linestatus", "l_quantity", "l_extendedprice",
+        "l_discount", "l_tax", "l_orderkey", "l_comment")
+      .write.parquet(s"$dir/lineitem.parquet")
+    val p = plan(SparkEntry.queries("q1_agg")(spark, dir))
+    val s = scans(p)
+    assert(s.size == 1)
+    assert(s.head.requiredSchema.fieldNames.toSet == Set("l_returnflag", "l_linestatus",
+      "l_quantity", "l_extendedprice", "l_discount"), s.head.requiredSchema)
+    val exchanges = p.collect { case e: ShuffleExchangeExec => e }
+    assert(exchanges.size == 1, p)
+    assert(mapSide(exchanges.head).exists(isPartialAgg), p)
+  }
+}

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 
 import graft.cluster.{ConnectedComponents, Pipeline}
@@ -159,6 +160,26 @@ class ConnectedComponentsSpec extends SparkSpec {
       .as[(Long, Long)].collect().toMap
     assert(got == UnionFindOracle.components(nodes, chain))
     assert(retires == 1, s"driver fast path should retire exactly once, got $retires")
+  }
+
+  test("CC edge-cap override above the probe limit is clamped, not a silent star-loop fallback") {
+    // a cap beyond Int.MaxValue - 1 is clamped, so a 39-edge chain still
+    // takes the driver path (LocalRelation result, no checkpointed
+    // LogicalRDD leaf). A non-numeric cap falls back to the default, which
+    // also takes the driver path here.
+    val nodes = (0 until 40).map(i => Hashing.stable(i)).distinct
+    val chain = nodes.sliding(2).map(s => (s(0), s(1))).toSeq
+    for (cap <- Seq("9999999999", "lots")) {
+      spark.conf.set("spark.graft.cc.driverUnionFindMaxEdges", cap)
+      try {
+        val comps = ConnectedComponents.components(spark, chain.toDF("a", "b"))
+        val leaves = comps.queryExecution.analyzed.collectLeaves()
+        assert(leaves.forall(_.isInstanceOf[LocalRelation]), s"cap $cap: $leaves")
+        val got = ConnectedComponents.assign(nodes.toDF("row_id"), comps)
+          .as[(Long, Long)].collect().toMap
+        assert(got == UnionFindOracle.components(nodes, chain))
+      } finally spark.conf.unset("spark.graft.cc.driverUnionFindMaxEdges")
+    }
   }
 
   private object Hashing {
