@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.graft.StageProfiler
 import org.apache.spark.sql.SparkSession
 
 import graft.cluster.Pipeline
@@ -77,43 +78,30 @@ object ScalingBench {
     s
   }
 
-  /** Stage-level profile: wall duration vs summed task time exposes whether
-    * a stage is barrier-bound (few/short tasks) or compute-bound. */
-  private final class StageProfiler extends org.apache.spark.scheduler.SparkListener {
-    val rows = scala.collection.mutable.ArrayBuffer.empty[(Int, String, Long, Int, Long, Long)]
-    var shuffleWrite = 0L
-    var spill = 0L
-    override def onStageCompleted(
-        sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-      val i = sc.stageInfo
-      val dur = (for { s <- i.submissionTime; e <- i.completionTime } yield e - s).getOrElse(-1L)
-      rows += ((i.stageId, i.name.takeWhile(_ != '\n').take(60), dur,
-        i.numTasks, i.taskMetrics.executorRunTime, i.taskMetrics.jvmGCTime))
-      shuffleWrite += i.taskMetrics.shuffleWriteMetrics.bytesWritten
-      spill += i.taskMetrics.diskBytesSpilled
+  /** Stage-level profile of one timed run: wall duration vs summed task
+    * time exposes whether a stage is barrier-bound (few/short tasks) or
+    * compute-bound. */
+  private def report(prof: StageProfiler): Unit = {
+    val stages = prof.stages
+    System.err.println("[stages] top by wall duration:")
+    stages.sortBy(-_.wallMs).take(25).foreach { st =>
+      System.err.println(f"[stages] id=${st.id}%4d wall=${st.wallMs / 1000.0}%7.1fs tasks=${st.tasks}%4d taskTimeSum=${st.runMs / 1000.0}%8.1fs gc=${st.gcMs / 1000.0}%6.1fs  ${st.name}")
     }
-    def report(topN: Int = 25): Unit = {
-      System.err.println("[stages] top by wall duration:")
-      rows.sortBy(-_._3).take(topN).foreach { case (id, name, dur, nt, rt, gc) =>
-        System.err.println(f"[stages] id=$id%4d wall=${dur / 1000.0}%7.1fs tasks=$nt%4d taskTimeSum=${rt / 1000.0}%8.1fs gc=${gc / 1000.0}%6.1fs  $name")
-      }
-      val wall = rows.map(_._3).sum / 1000.0
-      val task = rows.map(_._5).sum / 1000.0
-      // task-second and GC totals expose single-box contention: equal work
-      // at both core counts should show equal task-time sums; inflation at
-      // the high count = shared heap/GC/memory-bus contention inside ONE
-      // JVM, which a real N→4N cluster (4× heaps, 4× memory buses) never
-      // pays. Reported alongside the efficiency pair in BENCH.md.
-      val gc = rows.map(_._6).sum / 1000.0
-      System.err.println(f"[stages] total stage-wall=$wall%.1fs total task-time=$task%.1fs gc-time=$gc%.1fs stages=${rows.size}")
-      System.err.println(f"[stages] total shuffle-write=${shuffleWrite / 1e9}%.2fGB disk-spill=${spill / 1e9}%.2fGB")
-    }
+    val wall = stages.map(_.wallMs).sum / 1000.0
+    val task = stages.map(_.runMs).sum / 1000.0
+    // task-second and GC totals expose single-box contention: equal work
+    // at both core counts should show equal task-time sums; inflation at
+    // the high count = shared heap/GC/memory-bus contention inside ONE
+    // JVM, which a real N→4N cluster (4× heaps, 4× memory buses) never
+    // pays. Reported alongside the efficiency pair in BENCH.md.
+    val gc = stages.map(_.gcMs).sum / 1000.0
+    System.err.println(f"[stages] total stage-wall=$wall%.1fs total task-time=$task%.1fs gc-time=$gc%.1fs stages=${stages.size}")
+    System.err.println(f"[stages] total shuffle-write=${stages.map(_.shuffleWriteBytes).sum / 1e9}%.2fGB disk-spill=${stages.map(_.spillBytes).sum / 1e9}%.2fGB")
   }
 
   private def timedRun(cpus: Int, imagesPath: String, warm: Boolean): (Long, Double, Double) = {
     val spark = session(cpus)
-    val prof = new StageProfiler
-    if (sys.env.contains("SPARK_GRAFT_PROFILE")) spark.sparkContext.addSparkListener(prof)
+    val prof = StageProfiler.attach(spark.sparkContext)
     val images = spark.read.parquet(imagesPath)
     if (warm) { // tiny warm-up: JIT + codegen caches, not reported
       // eager checkpoint: limit() is evaluated ONCE, so Pipeline.run's two
@@ -143,7 +131,7 @@ object ScalingBench {
     val sec = (System.nanoTime() - t0) / 1e9
     res.stats.foreach(s => System.err.println(
       f"[phase] ${s.phase} round=${s.macroRound} sec=${s.seconds}%.2f verified=${s.verifiedPairs} singles=${s.singles} workRate=${s.workRate}%.4f"))
-    if (sys.env.contains("SPARK_GRAFT_PROFILE")) prof.report()
+    report(prof)
     // Quality at scale (outside the timing): truth group is encoded in the
     // generator's image_id ("img-<group>-<copy>[_r<replica>]"), so recall is
     // measurable on any generated or replicated corpus.

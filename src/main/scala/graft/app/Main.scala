@@ -5,6 +5,7 @@ import org.apache.spark.sql.SparkSession
 import graft.cluster.Pipeline
 import graft.eval.Metrics
 import graft.gen.SyntheticCorpus
+import graft.io.TableIO
 import graft.model.GraftConfig
 
 /** spark-submit-shaped entry point (SURVEY.md §7.1 app/Main).
@@ -53,10 +54,7 @@ object Main {
           megaGroupRows = opts.getOrElse("mega", "0").toInt)
         val out = opts("out")
         val gen = SyntheticCorpus.generate(spark, cfg).cache()
-        SyntheticCorpus.imagesOf(gen).withColumn("part_id",
-            org.apache.spark.sql.functions.pmod(org.apache.spark.sql.functions.xxhash64(
-              org.apache.spark.sql.functions.col("image_id")), org.apache.spark.sql.functions.lit(8)))
-          .write.mode("overwrite").partitionBy("part_id").parquet(s"$out/images")
+        TableIO.writeImages(SyntheticCorpus.imagesOf(gen), s"$out/images", 8)
         SyntheticCorpus.truthOf(gen).write.mode("overwrite").parquet(s"$out/truth")
         println(s"""{"mode":"gen","rows":${gen.count()},"out":"$out"}""")
 

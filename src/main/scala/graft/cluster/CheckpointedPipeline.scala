@@ -85,8 +85,8 @@ object CheckpointedPipeline {
         "a one-time migration cost (delete old round state after upgrading).")
     fTodo.foreach { p =>
       val slice = spark.read.parquet(imagesPath).where(col("part_id") === p)
-      val feats = MinHash.featurize(spark, slice, cfg).toDF().drop("shingles")
-      feats.write.mode("overwrite").parquet(s"$workDir/features/part_id=$p")
+      MinHash.featurize(spark, slice, cfg)
+        .write.mode("overwrite").parquet(s"$workDir/features/part_id=$p")
       val rows = spark.read.parquet(s"$workDir/features/part_id=$p").count()
       TableIO.writeEntry(workDir, TableIO.LedgerEntry(
         s"features_$p", "features", p, rows,

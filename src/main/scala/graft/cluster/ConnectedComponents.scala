@@ -119,7 +119,8 @@ object ConnectedComponents {
 
   /** Run to fixpoint. Input: edge DataFrame with long columns (a, b).
     * Output: (row_id, cluster_id) for every node occurring in `edges`,
-    * cluster_id = component minimum.
+    * cluster_id = component minimum. Throws `IllegalStateException` if the
+    * star loop has not converged after `maxIter` star-pairs.
     *
     * Small graphs (≤ [[DefaultDriverUnionFindMaxEdges]] distinct edges, or
     * the session override) short-circuit to a driver union-find: ONE probe
@@ -223,6 +224,9 @@ object ConnectedComponents {
       curSig = nextSig
       iter += 1
     }
+    if (!converged) // a partial star forest is not a clustering
+      throw new IllegalStateException(
+        s"ConnectedComponents: star loop did not converge in $maxIter iterations")
 
     // Fixpoint is a star forest: non-roots appear once as `a` pointing at the
     // root; roots appear only as `b`. The output is EAGERLY checkpointed so

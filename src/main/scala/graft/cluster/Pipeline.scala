@@ -67,8 +67,8 @@ object Pipeline {
   /** The run's two caches (see [[buildCaches]]), their row count, the
     * typical caption length, and the shuffles that back them — the keep
     * set of every shuffle retirement. */
-  private[cluster] final case class Caches(features: DataFrame, captions: DataFrame, n: Long,
-                                           capLen: Int, keep: Set[Int])
+  private[graft] final case class Caches(features: DataFrame, captions: DataFrame, n: Long,
+                                         capLen: Int, keep: Set[Int])
 
   /** (clusters, singles) off the small checkpointed sizes relation. */
   private def sizeStats(sizes: DataFrame): (Long, Long) = {
@@ -212,6 +212,10 @@ object Pipeline {
     * (ADVICE r2). */
   private[graft] val RepBroadcastMaxRows = 4000000L
 
+  /** Passes whose focus estimate is at most this many rows run under
+    * [[withSmallPassConf]]. */
+  private[graft] val SmallPassFocusRows = 100000L
+
   /** The per-pass score-delta relation holds one row per DISTINCT verified-
     * pair endpoint — at most 2·nVerified rows — so it may ride a broadcast
     * hint only when that bound stays within [[RepBroadcastMaxRows]]
@@ -223,7 +227,7 @@ object Pipeline {
     * barrier-separated stages; at that size the wall is per-stage ADAPTIVE
     * REPLANNING + task-launch latency, not work (the ~91 s core-count-
     * invariant residual pass, VERDICT r3 #2). Passes whose focus estimate
-    * is below `cfg.smallPassFocusRows` therefore run with AQE off and a
+    * is below [[SmallPassFocusRows]] therefore run with AQE off and a
     * small static shuffle-partition count; both are runtime confs restored
     * afterwards, so large passes keep AQE's skew/coalesce machinery.
     *
@@ -249,9 +253,9 @@ object Pipeline {
     }
 
   /** Measured hot-cache footprint (features cache after the round-5 diet:
-    * row_id + phash + 40 32-bit minhash lanes + row overhead), CacheAudit /
-    * BENCH.md: ~186–196 B/row across 2M–64M corpora. Used only by the
-    * heap-pressure warning below. */
+    * row_id + phash + 40 32-bit minhash lanes + row overhead), BENCH.md:
+    * ~186–196 B/row across 2M–64M corpora; `MeasurementSpec` pins it on the
+    * e2e fixture. Used only by the heap-pressure warning below. */
   private[graft] val HotCacheBytesPerRow = 200L
 
   /** VERDICT r7 "what's wrong" #2 — name the misconfiguration before it
@@ -291,7 +295,7 @@ object Pipeline {
     * corpus re-shuffles dominated macro-round cost at both parallelism
     * levels. Round-5 cache diet (VERDICT r4 #1): the hot cache carries ONLY
     * the columns the per-pass scans touch (with 32-bit lanes: 186 of the
-    * round-4 456 B/row, CacheAudit), so at 32M+ rows it stops competing
+    * round-4 456 B/row, BENCH.md round 5), so at 32M+ rows it stops competing
     * with execution memory. The caption column (92 B/row, read only by
     * round-0 exact-dup/chunk hashing and the hamming-SURVIVOR side of each
     * verify) lives in its own DISK_ONLY cache: columnar-compressed on
@@ -590,19 +594,21 @@ object Pipeline {
   }
 
   /** 1. Featurize -- bytes column pruned from the scan (SURVEY.md par.4).
-    * The shingle array is consumed inside featurize (minhash/simhash);
-    * verification recomputes caption grams at the verify site, so the
-    * cached relation carries ~10x less per row without it. Captions come
-    * from a second scan of the SOURCE (caption is a source column; row_id
-    * is a hash of image_id), not a second featurize pass — no double
-    * shingle/signature compute — so `images` must be deterministic
-    * ([[buildCaches]]). Then the shared driver loop ([[loop]]). */
-  def run(spark: SparkSession, images: DataFrame, cfg: GraftConfig = GraftConfig()): Result = {
-    val hot = MinHash.featurize(spark, images, cfg).toDF()
-      .drop("shingles", "caption", "simhash")
+    * Shingles live only inside featurize; verification recomputes caption
+    * grams at the verify site, so the cached relation carries ~10x less per
+    * row. Then the shared driver loop ([[loop]]). */
+  def run(spark: SparkSession, images: DataFrame, cfg: GraftConfig = GraftConfig()): Result =
+    loop(spark, caches(spark, images, cfg), cfg)
+
+  /** The two caches [[run]] clusters. Captions come from a second scan of
+    * the SOURCE (caption is a source column; row_id is a hash of
+    * image_id), not a second featurize pass — no double shingle/signature
+    * compute — so `images` must be deterministic ([[buildCaches]]). */
+  private[graft] def caches(spark: SparkSession, images: DataFrame, cfg: GraftConfig): Caches = {
+    val hot = MinHash.featurize(spark, images, cfg).toDF().drop("caption")
     val cold = images.select(
       graft.feat.RowIds.rowIdCol(col("image_id")).as("row_id"), col("caption"))
-    loop(spark, buildCaches(spark, hot, cold, cfg), cfg)
+    buildCaches(spark, hot, cold, cfg)
   }
 
   /** The driver loop — the reference's `run()` (`:697-711`): round 0, then
@@ -638,11 +644,11 @@ object Pipeline {
     // Round-8 NEGATIVE result, kept on record (guide §1.2 — measure, don't
     // assume): wrapping round 0 in the small-pass conf at fixture scale
     // (AQE off + 16 static shuffle partitions) made round 0 itself faster
-    // (5.0 vs 6.4 s at the 15k-row bench corpus, PipeLab A/B) but the
-    // downstream macro pass SLOWER (9.6 vs 7.0 s) and the run +21 jobs:
-    // the state checkpoints materialize 16-partitioned instead of
-    // AQE-coalesced to ~1, and every later pass pays the wider task fan
-    // on a few-thousand-row relation. Round 0 therefore stays on the
+    // (5.0 vs 6.4 s at the 15k-row bench corpus, in-JVM A/B, BENCH.md
+    // round 8) but the downstream macro pass SLOWER (9.6 vs 7.0 s) and the
+    // run +21 jobs: the state checkpoints materialize 16-partitioned
+    // instead of AQE-coalesced to ~1, and every later pass pays the wider
+    // task fan on a few-thousand-row relation. Round 0 therefore stays on the
     // session conf; only the late macro passes flip (below), as measured
     // in round 3.
     var (st, last, bad) = resume.getOrElse {
@@ -656,7 +662,7 @@ object Pipeline {
       val from = last.macroRound + 1
       val rounds = from until (from + ctl.passSize(from, bad, last.clusters))
       val (st2, stat) = timed(
-        withSmallPassConf(spark, last.clusters <= cfg.smallPassFocusRows) {
+        withSmallPassConf(spark, last.clusters <= SmallPassFocusRows) {
           macroStep(spark, c, st, cfg, rounds, last.clusters, last.singles, retire)
         })
       val (nbad, stop) = ctl.stepPass(bad, rounds, last.singles, stat)

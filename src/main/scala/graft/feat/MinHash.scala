@@ -15,9 +15,9 @@ import graft.util.Hashing._
   * (P[sig_i(A)=sig_i(B)] ≈ Jaccard(A,B)), nothing to broadcast but m seeds.
   *
   * Everything is computed in ONE typed mapPartitions pass over the input
-  * (per input_hint: typed Dataset, no RDD), emitting shingles + m-lane
-  * signature + SimHash per row; Spark's native parallelism replaces the
-  * reference's multiprocessing queues (`:289-397`).
+  * (per input_hint: typed Dataset, no RDD), emitting the m-lane signature
+  * per row; Spark's native parallelism replaces the reference's
+  * multiprocessing queues (`:289-397`). [[simhash]] serves `DocDedup`.
   */
 object MinHash {
 
@@ -36,7 +36,7 @@ object MinHash {
     * immeasurable against the sdLow = 0.22 verification gate. 32-bit lanes
     * are the standard MinHash width (Spark's own MinHashLSH uses int
     * hashes); the switch halved the dominant column of the features cache
-    * (340 → 170 B/row of a measured 456 B/row at m = 40, CacheAudit),
+    * (340 → 170 B/row of a measured 456 B/row at m = 40, BENCH.md round 5),
     * which at 32M rows was competing with execution memory (−17% per-row
     * throughput, BENCH.md round 4). The min is taken over the UNSIGNED
     * 32-bit order via the signed-flip trick so the lane keeps uniform
@@ -98,7 +98,7 @@ object MinHash {
           val sh =
             if (usePhash) Shingler.shingles(caption, phash, q)
             else Shingler.captionShingles(caption, q)
-          FeatureRow(RowIds.rowId(id), caption, sh, signature(sh, seeds), simhash(sh), phash)
+          FeatureRow(RowIds.rowId(id), caption, signature(sh, seeds), phash)
         }
       }
   }

@@ -5,6 +5,8 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.core.{JacksonException, JsonParser}
+import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, ObjectMapper}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -65,77 +67,42 @@ object TableIO {
     Files.deleteIfExists(f)
   }
 
+  private val ledgerJson = new ObjectMapper()
+    .enable(DeserializationFeature.FAIL_ON_TRAILING_TOKENS)
+    .enable(JsonParser.Feature.STRICT_DUPLICATE_DETECTION)
+
+  private val LedgerFields = Set("key", "stage", "partition", "rows", "metrics")
+
   /** Strict inverse of [[writeEntry]] (ADVICE r3): resume-control state must
     * come from a structured parse that FAILS LOUDLY on format drift, never
     * from regex scraping with silent defaults — a ledger written by a
     * different format should abort the resume, not replay it with wrong
-    * pass sizing. Only the escapes [[q]] emits are accepted. */
+    * pass sizing. Exactly the five [[LedgerEntry]] fields, integer
+    * `partition`/`rows` and string metric values are accepted; anything
+    * else, a torn file or trailing content throws. */
   def readEntry(base: String, key: String): LedgerEntry = {
     val f = ledgerDir(base).resolve(s"$key.json")
-    val json = new String(Files.readAllBytes(f), StandardCharsets.UTF_8)
-    var i = 0
-    def fail(msg: String): Nothing =
-      throw new IllegalStateException(s"ledger entry $f: $msg (at offset $i)")
-    def ws(): Unit = while (i < json.length && json(i).isWhitespace) i += 1
-    def expect(c: Char): Unit = {
-      ws(); if (i >= json.length || json(i) != c) fail(s"expected '$c'"); i += 1
-    }
-    def str(): String = {
-      expect('"')
-      val sb = new StringBuilder
-      while (i < json.length && json(i) != '"') {
-        json(i) match {
-          case '\\' =>
-            if (i + 1 >= json.length) fail("truncated escape")
-            json(i + 1) match {
-              case '"' => sb += '"'; i += 2
-              case '\\' => sb += '\\'; i += 2
-              case 'u' =>
-                if (i + 6 > json.length) fail("truncated \\u escape")
-                sb += Integer.parseInt(json.substring(i + 2, i + 6), 16).toChar
-                i += 6
-              case c => fail(s"unsupported escape \\$c")
-            }
-          case c => sb += c; i += 1
-        }
-      }
-      expect('"')
-      sb.toString
-    }
-    def long(): Long = {
-      ws()
-      val start = i
-      if (i < json.length && json(i) == '-') i += 1
-      while (i < json.length && json(i).isDigit) i += 1
-      if (i == start) fail("expected integer")
-      json.substring(start, i).toLong
-    }
-    def field(name: String): Unit = {
-      val got = str()
-      if (got != name) fail(s"expected field \"$name\", got \"$got\"")
-      expect(':')
-    }
-    expect('{')
-    field("key"); val k = str(); expect(',')
-    field("stage"); val stage = str(); expect(',')
-    field("partition"); val part = long(); expect(',')
-    field("rows"); val rows = long(); expect(',')
-    field("metrics"); expect('{')
-    val metrics = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    ws()
-    if (i < json.length && json(i) != '}') {
-      var more = true
-      while (more) {
-        val mk = str(); expect(':'); metrics(mk) = str()
-        ws()
-        if (i < json.length && json(i) == ',') { i += 1; more = true } else more = false
-      }
-    }
-    expect('}'); expect('}')
-    ws()
-    if (i != json.length) fail("trailing content")
+    def fail(msg: String): Nothing = throw new IllegalStateException(s"ledger entry $f: $msg")
+    val root =
+      try ledgerJson.readTree(Files.readAllBytes(f))
+      catch { case e: JacksonException => fail(s"malformed JSON: ${e.getOriginalMessage}") }
+    if (!root.isObject) fail("not a JSON object")
+    val fields = root.properties().asScala.map(_.getKey).toSet
+    if (fields != LedgerFields) fail(s"fields ${fields.toSeq.sorted.mkString(", ")}; " +
+      s"expected ${LedgerFields.toSeq.sorted.mkString(", ")}")
+    def str(n: JsonNode, what: String): String =
+      if (n.isTextual) n.textValue else fail(s"$what is not a string")
+    val part = root.get("partition")
+    if (!part.isInt) fail("partition is not an int")
+    val rows = root.get("rows")
+    if (!rows.isIntegralNumber || !rows.canConvertToLong) fail("rows is not a long")
+    val m = root.get("metrics")
+    if (!m.isObject) fail("metrics is not an object")
+    val metrics = m.properties().asScala
+      .map(e => e.getKey -> str(e.getValue, s"metric ${e.getKey}")).toMap
+    val k = str(root.get("key"), "key")
     if (k != key) fail(s"key mismatch: file says \"$k\"")
-    LedgerEntry(k, stage, part.toInt, rows, metrics.toMap)
+    LedgerEntry(k, str(root.get("stage"), "stage"), part.intValue, rows.longValue, metrics)
   }
 
   /** Write the images table in the Iceberg-emulating layout. */

@@ -33,16 +33,13 @@ final case class GenRow(
     part_id: Int
 )
 
-/** Per-row derived features (SURVEY.md §2.2 P1/P2).
-  * `shingles` carries caption q-grams AND pHash bit n-grams (domain-tagged,
-  * duplicates preserved — Sorensen-Dice divides by list lengths, reference
-  * `lsh_based_clustering.py:242`). */
+/** Per-row derived features (SURVEY.md §2.2 P2): the MinHash signature
+  * of the row's shingles (caption q-grams AND pHash bit n-grams), with the
+  * caption and pHash the verify phase reads. */
 final case class FeatureRow(
     row_id: Long,
     caption: String,
-    shingles: Array[Long],
     minhash: Array[Int], // length m; 32-bit lanes (MinHash.signature doc)
-    simhash: Long,
     phash: Long
 )
 
@@ -117,10 +114,5 @@ final case class GraftConfig(
                                    // measured to never fire mid-run; peak
                                    // scratch = CUMULATIVE shuffle bytes
                                    // without this — see ShuffleRetirement)
-    smallPassFocusRows: Long = 100000, // focus sets below this run with AQE off
-                                   // and few shuffle partitions: per-stage
-                                   // adaptive replanning dominates tiny-pass
-                                   // wall (the ~91 s core-count-invariant
-                                   // residual pass, VERDICT r3 #2)
     seed: Long = 42L
 )

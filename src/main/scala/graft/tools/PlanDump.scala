@@ -2,7 +2,7 @@ package graft.tools
 
 import java.io.{File, PrintWriter}
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
+import org.apache.spark.graft.StageProfiler
 import org.apache.spark.sql.SparkSession
 
 import graft.SparkEntry
@@ -11,7 +11,7 @@ import graft.SparkEntry
   * counts for SparkEntry queries to `plans/<tag>/<query>.txt` — the
   * round-8 optimization evidence (guide §1: capture the plan shape and the
   * job count before/after every change; the judge checks plan claims
-  * against these files). Job/stage counts come from a SparkListener over
+  * against these files). Job/stage counts come from a [[StageProfiler]] over
   * the query's full execution (construction + one count() action — the
   * bench's own action), so driver-composed queries (the m* metrics, whose
   * returned DataFrame is a LocalRelation of scalars) still show their real
@@ -38,21 +38,15 @@ object PlanDump {
     val dir = new File(s"plans/$tag")
     dir.mkdirs()
 
-    @volatile var jobs = 0
-    @volatile var stages = 0
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = jobs += 1
-      override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit = stages += 1
-    }
-    spark.sparkContext.addSparkListener(listener)
+    val prof = StageProfiler.attach(spark.sparkContext)
 
     names.foreach { name =>
-      jobs = 0; stages = 0
+      prof.reset()
       val t0 = System.nanoTime()
       val df = SparkEntry.queries(name)(spark, sfDir)
       val rows = df.count()
       val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300) // let queued listener events drain before reading counts
+      val (jobs, stages) = (prof.jobs, prof.stages.size)
       val plan = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
       val pw = new PrintWriter(new File(dir, s"$name.txt"))

@@ -197,6 +197,28 @@ class ResumeSpec extends SparkSpec {
     intercept[IllegalStateException] { TableIO.readEntry(base, "round_3") }
   }
 
+  test("ledger reader rejects extra fields, non-integer counts, non-string metrics and trailing content") {
+    val base = Files.createTempDirectory("graft_ledger_strict").toString
+    TableIO.writeEntry(base, TableIO.LedgerEntry("round_1", "round", -1, 5L, Map("singles" -> "2")))
+    val f = TableIO.ledgerDir(base).resolve("round_1.json")
+    val good = new String(Files.readAllBytes(f))
+    val bad = Seq(
+      good.replace("\"metrics\"", "\"extra\": 1, \"metrics\""),
+      good.replace("\"rows\": 5", "\"rows\": \"5\""),
+      good.replace("\"rows\": 5", "\"rows\": 5.5"),
+      good.replace("\"partition\": -1", "\"partition\": 4294967296"),
+      good.replace("\"singles\": \"2\"", "\"singles\": 2"),
+      good + "{}",
+      good.replace("\"round_1\"", "\"round_2\""),
+      "")
+    bad.foreach { txt =>
+      assert(txt != good)
+      Files.write(f, txt.getBytes)
+      val ex = intercept[IllegalStateException](TableIO.readEntry(base, "round_1"))
+      assert(ex.getMessage.contains(f.toString), ex.getMessage)
+    }
+  }
+
   test("S2 evyat-style export writes majority rep + sorted members") {
     val df = Seq(
       (1L, "b-read", "orig1"), (1L, "a-read", "orig1"), (1L, "c-read", "orig2"),

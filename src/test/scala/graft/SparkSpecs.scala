@@ -182,6 +182,19 @@ class ConnectedComponentsSpec extends SparkSpec {
     }
   }
 
+  test("CC star loop that stops at maxIter unconverged fails loudly") {
+    // one star-pair cannot collapse a 40-node chain; a partial star forest
+    // must not be returned as a clustering
+    val nodes = (0 until 40).map(i => Hashing.stable(i)).distinct
+    val chain = nodes.sliding(2).map(s => (s(0), s(1))).toSeq
+    val ex = intercept[IllegalStateException] {
+      withDistributedCc {
+        ConnectedComponents.components(spark, chain.toDF("a", "b"), maxIter = 1)
+      }
+    }
+    assert(ex.getMessage.contains("did not converge in 1 iterations"), ex.getMessage)
+  }
+
   private object Hashing {
     def stable(i: Int): Long = graft.util.Hashing.mix64(i.toLong)
   }
