@@ -33,8 +33,9 @@ import graft.model.GraftConfig
   * CONSECUTIVE MACRO ROUNDS ARE FUSED into a single pass — round j of a
   * fused pass samples (singles ∪ rank-of-j reps) × round-j's L lane
   * subsets, so the pass emits exactly the union of the sequential rounds'
-  * candidate draws in ONE explode/chain/verify/CC job instead of T
-  * stage-barrier-bound jobs.
+  * candidate draws from ONE explode (each focus row over the bands its
+  * rank draws in the pass, [[Banding.explodePassBands]]) feeding one
+  * chain/verify/CC, instead of T sequential passes.
   */
 object Pipeline {
 
@@ -266,9 +267,23 @@ object Pipeline {
     * cryptic blockmgr ENOENT mid-CC (three CcScratchBench crashes at
     * default heap, round 7). Returns the warning it printed, if any, so a
     * spec can pin the guard. Heap ∝ data remains the protocol; this turns
-    * a violation into a diagnosed warning instead of a mystery crash. */
-  private[graft] def heapPressureWarning(spark: SparkSession, n: Long): Option[String] = {
-    val frac = spark.conf.get("spark.memory.fraction", "0.6").toDouble
+    * a violation into a diagnosed warning instead of a mystery crash.
+    *
+    * Only a `local` master is checked: elsewhere the caches live in the
+    * executors' heaps, which this JVM's max memory says nothing about. */
+  private[graft] def heapPressureWarning(spark: SparkSession, n: Long): Option[String] =
+    if (!spark.sparkContext.isLocal) None
+    else heapPressureWarning(n, spark.conf.get("spark.memory.fraction", "0.6"))
+
+  /** The check above for a raw `spark.memory.fraction` value; a value that
+    * is not a number in (0, 1] is ignored, with a named warning, for
+    * Spark's default 0.6. */
+  private[graft] def heapPressureWarning(n: Long, fractionConf: String): Option[String] = {
+    val frac = fractionConf.trim.toDoubleOption.filter(f => f > 0 && f <= 1).getOrElse {
+      System.err.println("[graft] MEMORY FRACTION IGNORED: spark.memory.fraction=" +
+        s"\"$fractionConf\" is not a number in (0, 1]; the heap-pressure check uses 0.6.")
+      0.6
+    }
     val pool = (Runtime.getRuntime.maxMemory() * frac).toLong
     val est = n * HotCacheBytesPerRow
     if (est > pool) {
@@ -447,7 +462,7 @@ object Pipeline {
   }
 
   /** Phase 4, one PASS = the fused consecutive macro rounds `rounds`:
-    * focus set -> per-round banding branches fused into one explode ->
+    * focus set -> one explode over every round's bands -> chain ->
     * verify -> incremental CC. Returns the new state and the pass's stat
     * (attributed to `rounds.last`). */
   private def macroStep(spark: SparkSession, c: Caches, st: State, cfg: GraftConfig,
@@ -476,32 +491,28 @@ object Pipeline {
       .select(col("row_id"), col("rk"))
     val focus = singlesDf.unionAll(reps)
 
-    // persisted: the per-round branches below scan it rounds.size times and
-    // chainPairs scans its input twice (intra window + shard-min aggregate)
+    // persisted: chainPairs scans the explode's input twice (intra window +
+    // shard-min aggregate), and each scan would otherwise redo the focus joins
     val focusFeatures = features.join(focus, "row_id")
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-    // Fused candidate generation: round j's branch = (singles ∪ rank-of-j
-    // reps) exploded over round j's L seeded lane subsets, band ids offset
-    // per round so buckets never mix across rounds. The union feeds ONE
-    // salted chaining pass — the same candidate draws a sequential run of
-    // these rounds would make (modulo focus refresh between rounds, which
-    // fusion trades for a T× cut in stage-barrier latency). Rep draws CAN
-    // diverge from the sequential schedule: ranks use pass-start scores and
-    // pass-start membership, so a row that would become a rep only after an
-    // intra-pass merge or score update is not sampled this pass. Only the
-    // singles side is a guaranteed superset of each fused round's unresolved
-    // rows — "recall-safe" is an approximation that has held at every
-    // measured scale, not an invariant (ADVICE r3; watch recall if
-    // fusedBandRowCap ever allows very wide passes on skewed corpora).
-    val buckets = rounds.map { j =>
-      val rkJ = (j - 1) % cfg.repsPerCluster + 1
-      val f = focusFeatures.where(col("rk") === 0 || col("rk") === rkJ)
-      // per-(macro round, band) seeds inside the hash keep buckets disjoint
-      // across the fused rounds — no band-id offset column needed (round 4)
-      Banding.explodeBands(f, cfg, j)
-    }.reduce(_ unionAll _)
-    val cand = Banding.chainPairs(buckets, cfg.saltShards)
+    // Fused candidate generation: ONE explode of the focus rows, each over
+    // the (seed, lanes) bands its rank draws in this pass — singles every
+    // round's L bands, a rank-r rep those of the rounds that sample rank r.
+    // Per-(macro round, band) seeds inside the hash keep buckets of
+    // different rounds disjoint. It feeds ONE salted chaining pass — the
+    // same candidate draws a sequential run of these rounds would make
+    // (modulo focus refresh between rounds, which fusion trades for a T×
+    // cut in stage-barrier latency). Rep draws CAN diverge from the
+    // sequential schedule: ranks use pass-start scores and pass-start
+    // membership, so a row that would become a rep only after an intra-pass
+    // merge or score update is not sampled this pass. Only the singles side
+    // is a guaranteed superset of each fused round's unresolved rows —
+    // "recall-safe" is an approximation that has held at every measured
+    // scale, not an invariant (ADVICE r3; watch recall if fusedBandRowCap
+    // ever allows very wide passes on skewed corpora).
+    val cand = Banding.chainPairs(
+      Banding.explodePassBands(focusFeatures, cfg, rounds), cfg.saltShards)
     // EAGER localCheckpoint, not persist (ADVICE r4): `verified` stays live
     // across this pass's early retirement below, and a persisted-only cache
     // would keep shuffle-backed lineage it could no longer recompute

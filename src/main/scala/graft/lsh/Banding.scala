@@ -73,6 +73,37 @@ object Banding {
       col("row_id"),
       explode(bandHashArray(col("minhash"), cfg, macroRound)).as("band_hash"))
 
+  /** One band of a pass's lookup table: its seed and its k lanes. */
+  final case class Band(seed: Long, lanes: Seq[Int])
+
+  /** The band-hash rows of one fused macro PASS (macro rounds `rounds`)
+    * from ONE explode. `focus` must have `row_id`, `minhash` and the focus
+    * rank `rk`: 0 for a single, r ≥ 1 for a cluster's r-th rep. Round j
+    * samples the singles and the reps of rank (j-1) % repsPerCluster + 1
+    * (the reference's cycling r, `:623-628`), so a literal table indexed by
+    * rk lists the bands each row draws — entry 0 every round's L bands,
+    * entry r the bands of the rounds of rank r — and a rep whose rank no
+    * round of the pass samples explodes to nothing. Each row is exploded
+    * over its entry and hashed as xxhash64(seed, minhash[lanes]), the same
+    * Long seed and Int lanes [[bandHashCols]] hashes, so the emitted
+    * (row_id, band_hash) multiset is exactly the union over the pass's
+    * rounds of round j's band hashes on its sampled rows. The plan does not
+    * grow with the pass width: only the literal does. */
+  def explodePassBands(focus: DataFrame, cfg: GraftConfig, rounds: Seq[Int]): DataFrame = {
+    val perRound = rounds.map { j =>
+      ((j - 1) % cfg.repsPerCluster + 1,
+        laneSeeds(cfg, j).zip(lanes(cfg, j)).map { case (s, ls) => Band(s, ls.toSeq) }.toSeq)
+    }
+    val table = (0 to cfg.repsPerCluster).map { r =>
+      perRound.collect { case (rk, bands) if r == 0 || rk == r => bands }.flatten
+    }
+    val (byRank, band) = (typedLit(table), col("band"))
+    focus
+      .select(col("row_id"), col("minhash"), explode(byRank(col("rk"))).as("band"))
+      .select(col("row_id"), xxhash64((band("seed") +:
+        (0 until cfg.k).map(i => col("minhash")(band("lanes")(i)))): _*).as("band_hash"))
+  }
+
   /** V4 — salted within-bucket chaining. Input must have columns
     * (row_id, band_hash); output is normalized pairs (a < b), distinct.
     *

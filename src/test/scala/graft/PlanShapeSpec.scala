@@ -64,15 +64,13 @@ class PlanShapeSpec extends SparkSpec {
     assert(s.head.partitionFilters.nonEmpty, s.head)
   }
 
-  test("banding: the exploded L×n relation crosses exactly one exchange, the (band_hash, salt) window") {
-    val cfg = GraftConfig()
-    val features = MinHash.featurize(spark, images, cfg).toDF()
-    val p = plan(Banding.candidatePairs(features, cfg, 0))
+  /** The exploded rows cross exactly one wide exchange, the
+    * (band_hash, salt) window; the other exchange the explode feeds carries
+    * partial-aggregate shard minima (≤ saltShards rows per bucket). */
+  private def assertOneWideBandExchange(p: SparkPlan): Unit = {
     val fed = p.collect {
       case e: ShuffleExchangeExec if mapSide(e).exists(_.isInstanceOf[GenerateExec]) => e
     }
-    // the other exchange the explode feeds carries partial-aggregate shard
-    // minima (≤ saltShards rows per bucket), not the L×n rows
     val (minima, wide) = fed.partition(e => mapSide(e).exists(isPartialAgg))
     assert(wide.size == 1, s"exploded rows cross ${wide.size} exchanges:\n$p")
     val keys = wide.head.outputPartitioning match {
@@ -81,6 +79,30 @@ class PlanShapeSpec extends SparkSpec {
     }
     assert(keys == Seq("band_hash", "salt"))
     assert(minima.size == 1, s"expected one shard-minima exchange:\n$p")
+  }
+
+  test("banding: the exploded L×n relation crosses exactly one exchange, the (band_hash, salt) window") {
+    val cfg = GraftConfig()
+    val features = MinHash.featurize(spark, images, cfg).toDF()
+    assertOneWideBandExchange(plan(Banding.candidatePairs(features, cfg, 0)))
+  }
+
+  test("macro pass: one explode, one wide exchange, and a plan that does not grow with the pass width") {
+    val cfg = GraftConfig()
+    val focus = MinHash.featurize(spark, images, cfg).toDF()
+      .withColumn("rk", pmod(col("row_id"), lit(cfg.repsPerCluster + 1)).cast("int"))
+    def generates(p: SparkPlan): Int = p.collect { case g: GenerateExec => g }.size
+    val explode = plan(Banding.explodePassBands(focus, cfg, 1 to 10))
+    assert(generates(explode) == 1, s"expected one explode:\n$explode")
+    def passPlan(rounds: Seq[Int]): SparkPlan =
+      plan(Banding.chainPairs(Banding.explodePassBands(focus, cfg, rounds), cfg.saltShards))
+    val (one, ten) = (passPlan(Seq(1)), passPlan(1 to 10))
+    // chainPairs reads its input twice (window + shard minima): one explode
+    // on each read, whatever the number of rounds
+    assert(generates(ten) == 2, s"expected one explode per read:\n$ten")
+    assertOneWideBandExchange(ten)
+    def nodes(p: SparkPlan): Seq[String] = p.collect { case n => n.nodeName }
+    assert(nodes(one) == nodes(ten), s"T = 1:\n$one\nT = 10:\n$ten")
   }
 
   test("q1_agg pushes its projection into the scan and aggregates partially before the exchange") {

@@ -149,6 +149,25 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(Pipeline.heapPressureWarning(spark, 1000L).isEmpty)
   }
 
+  test("heap-pressure guard: a malformed spark.memory.fraction is ignored loudly, not thrown") {
+    // spark.memory.fraction is a core conf (not settable on a live session),
+    // so the raw-value entry point is driven directly
+    val err = new java.io.ByteArrayOutputStream()
+    val saved = System.err
+    System.setErr(new java.io.PrintStream(err, true))
+    val (big, small) =
+      try (Pipeline.heapPressureWarning(Long.MaxValue / 400, "lots"),
+        Pipeline.heapPressureWarning(1000L, "1.5"))
+      finally System.setErr(saved)
+    assert(big.exists(w => w.contains("HEAP PRESSURE") && w.contains("fraction=0.6")), big)
+    assert(small.isEmpty)
+    val ignored = err.toString.linesIterator.filter(_.contains("MEMORY FRACTION IGNORED")).toSeq
+    assert(ignored.size == 2 && ignored.head.contains("\"lots\""), err.toString)
+    // a well-formed value is used as given
+    assert(Pipeline.heapPressureWarning(Long.MaxValue / 400, " 0.5 ")
+      .exists(_.contains("fraction=0.5")))
+  }
+
   test("CC driver fast path retires candidate shuffles once, after the probe") {
     val nodes = (0 until 40).map(i => Hashing.stable(i)).distinct
     val chain = nodes.sliding(2).map(s => (s(0), s(1))).toSeq
@@ -231,6 +250,34 @@ class BandingSpec extends SparkSpec {
     assert(l1.map(_.toSeq).toSeq == l2.map(_.toSeq).toSeq)
     assert(l1.length == cfg.bandRounds)
     assert(l1.map(_.toSeq).distinct.length > cfg.bandRounds / 2)
+  }
+
+  test("pass explode emits exactly the per-round band-hash union filtered by rank") {
+    val cfg = GraftConfig()
+    val rnd = new scala.util.Random(11)
+    // three rows of every rank 0 (single) .. repsPerCluster
+    val rows = for (rk <- 0 to cfg.repsPerCluster; i <- 0 until 3)
+      yield (rk * 100L + i, Array.fill(cfg.m)(rnd.nextInt()), rk)
+    val focus = rows.toDF("row_id", "minhash", "rk")
+    def perRound(rounds: Seq[Int]): Seq[(Long, Long)] = rounds.flatMap { j =>
+      val rkJ = (j - 1) % cfg.repsPerCluster + 1
+      focus.where(col("rk") === 0 || col("rk") === rkJ)
+        .select(col("row_id"), explode(array(Banding.bandHashCols(col("minhash"), cfg, j): _*)))
+        .as[(Long, Long)].collect().toSeq
+    }.sorted
+    // a full cycle, a pass starting mid-cycle, a single-round pass
+    for (rounds <- Seq(1 to 10, 7 to 16, Seq(3))) {
+      val got = Banding.explodePassBands(focus, cfg, rounds)
+        .select("row_id", "band_hash").as[(Long, Long)].collect().toSeq.sorted
+      assert(got == perRound(rounds), s"rounds $rounds")
+      // a single draws L bands per round, a rank-r rep L per round of rank
+      // r — so a rep whose rank no round of the pass samples emits nothing
+      val ranks = rounds.map(j => (j - 1) % cfg.repsPerCluster + 1)
+      for ((id, _, rk) <- rows) {
+        val n = if (rk == 0) rounds.size else ranks.count(_ == rk)
+        assert(got.count(_._1 == id) == n * cfg.bandRounds, s"rounds $rounds row $id rk $rk")
+      }
+    }
   }
 }
 
