@@ -19,8 +19,9 @@ import graft.util.Hashing
   *
   * Spark realization: all rounds are fused — each round contributes one
   * column expression `xxhash64(round, sorted anchor substrings)`, the array
-  * is posexploded and fed through the same salted chaining as LSH banding
-  * (monotone OR-construction, SURVEY.md §7.3). The reference de-escalates
+  * is exploded into a `(row_id, band_hash)` relation and fed through the
+  * same salted chaining as LSH banding (monotone OR-construction, SURVEY.md
+  * §7.3). The reference de-escalates
   * from 2 anchors to 1 longer anchor after bad rounds (`:476-489`); we run
   * the first half of rounds with 2 anchors and the second half with 1 —
   * the same coverage without driver feedback.
@@ -59,7 +60,7 @@ object ChunkPhase {
     * corpus size and `capLen` a typical caption length — the reference
     * derives w and t from exactly these (`:468-469,484-485`). Exposed so
     * the pipeline can fuse these columns with the LSH band hashes into a
-    * single posexplode + chaining pass (one wide exchange for BOTH
+    * single explode + chaining pass (one wide exchange for BOTH
     * candidate families instead of two). */
   def hashCols(cfg: GraftConfig, n: Long, capLen: Int): Seq[Column] = {
     val rounds = cfg.chunkRounds

@@ -2,6 +2,8 @@ package graft.cluster
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -159,7 +161,10 @@ object ConnectedComponents {
     * verified-pair rows plus a ~GBs localCheckpoint materialization at
     * the exact moment the run's scratch disk peaks (the round-0 crest,
     * BENCH.md round 8). When set, `edges` is used as iteration state
-    * directly and is NEVER unpersisted here (the caller owns it). The
+    * directly and is NEVER unpersisted here (the caller owns it); a lazy
+    * (neither checkpointed nor cached) input that reaches the star loop is
+    * localCheckpointed first, so its query runs at most twice (probe and
+    * checkpoint), not once per reader. The
     * flag is a pure optimization even on contract breach: the star steps
     * filter self-loops and re-distinct internally, so a non-normalized
     * input converges to the same labels, just without the saved shuffle
@@ -200,8 +205,16 @@ object ConnectedComponents {
         return out
       }
       // fall through: > cap distinct edges — distributed star loop below
-      // (the probe already paid cur's materialization, which the first
-      // signature job would otherwise pay)
+      // (the probe already paid a checkpointed cur's materialization, which
+      // the first signature job would otherwise pay)
+    }
+    // A lazy inputNormalized query (DocDedup's verify joins, macroStep's
+    // label graph) would re-run for the signature AND the first star step:
+    // checkpoint it so the signature job below runs it once and the star
+    // steps read the blocks.
+    if (!curOwned && !isStored(cur)) {
+      cur = cur.localCheckpoint(false)
+      curOwned = true
     }
 
     var converged = false
@@ -239,6 +252,13 @@ object ConnectedComponents {
       .localCheckpoint()
     if (curOwned) graft.util.Checkpoints.unpersistCheckpoint(cur)
     out
+  }
+
+  /** Whether `df` reads stored rows — a checkpoint or a cached relation —
+    * rather than re-running its query on every action. */
+  private def isStored(df: DataFrame): Boolean = df.queryExecution.withCachedData match {
+    case _: LogicalRDD | _: InMemoryRelation => true
+    case _ => false
   }
 
   /** Whether a [[components]] result is empty. A driver-path result is a

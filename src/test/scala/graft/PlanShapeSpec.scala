@@ -2,19 +2,22 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.graft.StageProfiler
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec, SparkPlan}
 import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 
+import graft.cluster.Pipeline
 import graft.feat.MinHash
 import graft.gen.SyntheticCorpus
 import graft.io.TableIO
-import graft.lsh.Banding
+import graft.lsh.{Banding, VerifyPairs}
 import graft.model.GraftConfig
 
 /** The plan shapes the engine's cost model rests on (SURVEY.md §4: what
@@ -30,12 +33,18 @@ class PlanShapeSpec extends SparkSpec {
     spark.read.parquet(path)
   }
 
-  private def plan(df: DataFrame): SparkPlan = {
-    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try df.queryExecution.executedPlan
-    finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+  /** `f` with the session confs `kvs` set, restored afterwards. */
+  private def withConf[A](kvs: (String, String)*)(f: => A): A = {
+    val saved = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
+
+  private def plan(df: DataFrame): SparkPlan =
+    withConf("spark.sql.adaptive.enabled" -> "false")(df.queryExecution.executedPlan)
 
   private def scans(p: SparkPlan): Seq[FileSourceScanExec] =
     p.collect { case s: FileSourceScanExec => s }
@@ -73,11 +82,7 @@ class PlanShapeSpec extends SparkSpec {
     }
     val (minima, wide) = fed.partition(e => mapSide(e).exists(isPartialAgg))
     assert(wide.size == 1, s"exploded rows cross ${wide.size} exchanges:\n$p")
-    val keys = wide.head.outputPartitioning match {
-      case h: HashPartitioning => h.expressions.collect { case a: Attribute => a.name }
-      case other => fail(s"window exchange is not hash-partitioned: $other")
-    }
-    assert(keys == Seq("band_hash", "salt"))
+    assert(hashKeys(wide.head) == Seq("band_hash", "salt"))
     assert(minima.size == 1, s"expected one shard-minima exchange:\n$p")
   }
 
@@ -103,6 +108,68 @@ class PlanShapeSpec extends SparkSpec {
     assertOneWideBandExchange(ten)
     def nodes(p: SparkPlan): Seq[String] = p.collect { case n => n.nodeName }
     assert(nodes(one) == nodes(ten), s"T = 1:\n$one\nT = 10:\n$ten")
+  }
+
+  private def hashKeys(e: ShuffleExchangeExec): Seq[String] = e.outputPartitioning match {
+    case h: HashPartitioning => h.expressions.collect { case a: Attribute => a.name }
+    case other => fail(s"exchange is not hash-partitioned: $other")
+  }
+
+  /** Round-0 candidates (checkpointed, so a plan over them holds only the
+    * verify exchanges) verified against the caches `c`. */
+  private def verifyRound0(c: Pipeline.Caches, cfg: GraftConfig): DataFrame =
+    VerifyPairs.verify(Banding.candidatePairs(c.features, cfg, 0).localCheckpoint(),
+      c.features, c.captions, cfg.q, cfg.sdHigh, cfg.sdLow, cfg.distanceThreshold,
+      cfg.hammingThreshold, cfg.minLcs)
+
+  private def unpersist(c: Pipeline.Caches): Unit = {
+    c.features.unpersist(blocking = true)
+    c.captions.unpersist(blocking = true)
+  }
+
+  test("verify with broadcast joins off: only the pairs cross exchanges, four as before, none above a cache scan") {
+    // what a run at scale plans: every join sort-merges, and both caches
+    // are hash-partitioned on row_id, so only the pair side may shuffle —
+    // the repartition on `a` is the exchange the first join needs anyway
+    val cfg = GraftConfig()
+    val c = Pipeline.caches(spark, images, cfg)
+    try {
+      val p = withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1")(plan(verifyRound0(c, cfg)))
+      def unaryLeaf(n: SparkPlan): Option[SparkPlan] = n.children match {
+        case Seq() => Some(n)
+        case Seq(child) => unaryLeaf(child)
+        case _ => None
+      }
+      val exchanges = p.collect { case e: ShuffleExchangeExec => e }
+      exchanges.foreach { e =>
+        assert(!unaryLeaf(e.child).exists(_.isInstanceOf[InMemoryTableScanExec]),
+          s"exchange above a cache scan:\n$p")
+      }
+      assert(exchanges.map(hashKeys).sortBy(_.mkString) == Seq(Seq("a"), Seq("a"), Seq("b"), Seq("b")),
+        s"expected the pair side to cross a, b, a, b:\n$p")
+      val cacheParts = c.features.rdd.getNumPartitions
+      assert(exchanges.forall(_.outputPartitioning.numPartitions == cacheParts), p)
+    } finally unpersist(c)
+  }
+
+  test("verify under AQE: the accept stage runs one task per features-cache partition") {
+    // 16-byte pair rows fall far below AQE's coalescing floor, which ran this
+    // CPU-bound stage as ONE task; the explicit count keeps every partition
+    val cfg = GraftConfig()
+    withConf("spark.sql.adaptive.enabled" -> "true", "spark.sql.shuffle.partitions" -> "3") {
+      val c = Pipeline.caches(spark, images, cfg)
+      val prof = StageProfiler.attach(spark.sparkContext)
+      try {
+        val verify = verifyRound0(c, cfg)
+        prof.reset()
+        assert(verify.localCheckpoint().count() > 0)
+        val accept = prof.stages.filter(_.name.startsWith("localCheckpoint"))
+        assert(accept.map(_.tasks) == Seq(3), prof.stages.mkString("\n"))
+      } finally {
+        spark.sparkContext.removeSparkListener(prof)
+        unpersist(c)
+      }
+    }
   }
 
   test("q1_agg pushes its projection into the scan and aggregates partially before the exchange") {
