@@ -1,5 +1,6 @@
 package graft.cluster
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.LogicalRDD
@@ -58,10 +59,12 @@ object ConnectedComponents {
   }
 
   /** Default edge cap for the driver union-find fast path (see
-    * [[components]]): graphs whose DISTINCT normalized edge set fits under
-    * this bound are solved with the reference's own parent-array union-find
-    * on the driver (`/root/reference/lsh_based_clustering.py:210-229`)
-    * instead of the iterative star rounds. 200k edges ≈ 3.2 MB of longs —
+    * [[components]]): the bound is on the probe's raw rows, the spanning
+    * forest of each edge partition (at most one row per input edge). Graphs
+    * whose forest rows fit under it are solved with the reference's own
+    * parent-array union-find on the driver
+    * (`lsh_based_clustering.py:210-229`) instead of the
+    * iterative star rounds. 200k rows ≈ 3.2 MB of longs —
     * a bounded, scale-independent driver allocation, while the star loop
     * costs O(log n) Spark jobs of ~6 stages each, which dominates wall time
     * on fixture-scale graphs by 10×+ (guide §1.2: fix the distributed
@@ -119,18 +122,35 @@ object ConnectedComponents {
     out.toArray
   }
 
+  /** Each partition of `edges` reduced to a spanning forest by
+    * [[driverUnionFind]]: one `(v, local root)` row per non-root, and
+    * `(v, v)` for a node whose only edges are self-loops. Every edge's two
+    * endpoints share a local root, so the forest has the components, the
+    * minimum labels and the node set of `edges`, and never more rows than
+    * the partition has edges. Built on the row RDD: a typed
+    * `Dataset.mapPartitions` pays encoder codegen on every cold JVM. */
+  private def spanningForest(edges: DataFrame): RDD[(Long, Long)] =
+    edges.select("a", "b").queryExecution.toRdd.mapPartitions { rows =>
+      val local = driverUnionFind(rows.map(r => (r.getLong(0), r.getLong(1))).toArray)
+      val roots = local.iterator.collect { case (v, r) if v != r => r }.toSet
+      local.iterator.filter { case (v, r) => v != r || !roots(r) }
+    }
+
   /** Run to fixpoint. Input: edge DataFrame with long columns (a, b).
     * Output: (row_id, cluster_id) for every node occurring in `edges`,
     * cluster_id = component minimum. Throws `IllegalStateException` if the
     * star loop has not converged after `maxIter` star-pairs.
     *
-    * Small graphs (≤ [[DefaultDriverUnionFindMaxEdges]] distinct edges, or
-    * the session override) short-circuit to a driver union-find: ONE probe
-    * job over the normalized edge checkpoint replaces the whole star loop
-    * (each iteration of which is a localCheckpoint materialization + a
-    * signature job ≈ 6 stages). The output clustering is identical — both
-    * algorithms produce the component-minimum label (spec-pinned against
-    * the same oracle). The probe's `limit(cap+1)` fully materializes the
+    * Small graphs short-circuit to a driver union-find. The probe reduces
+    * each partition of the normalized edges to its spanning forest
+    * ([[spanningForest]]) and takes `cap + 1` rows; when the forest rows fit
+    * under [[DefaultDriverUnionFindMaxEdges]] (or the session override), the
+    * union-find over them replaces the whole star loop (each iteration of
+    * which is a localCheckpoint materialization + a signature job ≈ 6
+    * stages). The output clustering is identical — both algorithms produce
+    * the component-minimum label (spec-pinned against the same oracle).
+    * When the forest overflows the cap, the star loop runs on the original
+    * edges, unchanged. The probe's `take(cap+1)` fully materializes the
     * lazy checkpoint (LocalRDDCheckpointData computes missing partitions at
     * job end), so the distributed fallback loses nothing: its first
     * signature job reads cached blocks either way.
@@ -190,7 +210,10 @@ object ConnectedComponents {
     val cap = driverCap(spark)
     if (cap > 0) {
       import spark.implicits._
-      val probe = cur.as[(Long, Long)].limit(cap.toInt + 1).collect()
+      // the probe reads each partition's spanning forest, not its raw edges:
+      // dense groups collapse to one row per non-root, so a graph whose raw
+      // edges overflow the cap can still be solved on the driver
+      val probe = spanningForest(cur).take(cap.toInt + 1)
       if (probe.length <= cap) {
         // the probe materialized `cur`, so every candidate-generation
         // shuffle upstream of the checkpoint is dead — let the caller
@@ -204,7 +227,8 @@ object ConnectedComponents {
         if (curOwned) graft.util.Checkpoints.unpersistCheckpoint(cur)
         return out
       }
-      // fall through: > cap distinct edges — distributed star loop below
+      // fall through: > cap forest rows — distributed star loop below, on
+      // the original edges
       // (the probe already paid a checkpointed cur's materialization, which
       // the first signature job would otherwise pay)
     }

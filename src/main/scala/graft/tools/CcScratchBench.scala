@@ -82,10 +82,10 @@ object CcScratchBench {
     val baseline = usedBytes()
     val peak = new AtomicLong(baseline)
     val sampler = new Thread(() => {
-      while (!Thread.currentThread().isInterrupted) {
+      try while (true) {
         peak.updateAndGet(math.max(_, usedBytes()))
-        try Thread.sleep(2000) catch { case _: InterruptedException => return }
-      }
+        Thread.sleep(2000)
+      } catch { case _: InterruptedException => () }
     }, "cc-scratch-sampler")
     sampler.setDaemon(true)
 

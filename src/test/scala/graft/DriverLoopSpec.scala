@@ -59,4 +59,24 @@ class DriverLoopSpec extends SparkSpec {
       assert(assignOf(viaStar) == assignDriver)
     } finally spark.conf.unset(capKey)
   }
+
+  test("shuffle partitions 1, 7 and 64 give the identical assign and every PhaseStat") {
+    // CC's probe contracts each edge partition to a spanning forest, so how
+    // the edges are partitioned is the axis that could change its result;
+    // coalescing is off so every stage keeps the partition count it is given
+    val cfg = GraftConfig(seed = 7L)
+    val images = spark.read.parquet(imagesPath)
+    val runs = Seq(1, 7, 64).map { parts =>
+      withConf("spark.sql.shuffle.partitions" -> parts.toString,
+          "spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
+        val res = Pipeline.run(spark, images, cfg)
+        parts -> (res.stats.map(_.copy(seconds = 0.0)), assignOf(res))
+      }
+    }
+    val (_, (stats1, assign1)) = runs.head
+    for ((parts, (stats, assign)) <- runs.tail) {
+      assert(stats == stats1, s"$parts partitions")
+      assert(assign == assign1, s"$parts partitions")
+    }
+  }
 }

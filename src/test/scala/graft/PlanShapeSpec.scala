@@ -33,16 +33,6 @@ class PlanShapeSpec extends SparkSpec {
     spark.read.parquet(path)
   }
 
-  /** `f` with the session confs `kvs` set, restored afterwards. */
-  private def withConf[A](kvs: (String, String)*)(f: => A): A = {
-    val saved = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   private def plan(df: DataFrame): SparkPlan =
     withConf("spark.sql.adaptive.enabled" -> "false")(df.queryExecution.executedPlan)
 

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.graft.StageProfiler
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 
@@ -86,6 +88,68 @@ class ConnectedComponentsSpec extends SparkSpec {
         .as[(Long, Long)].collect().toMap
       assert(got == UnionFindOracle.components(nodes, chain))
     } finally spark.conf.unset("spark.graft.cc.driverUnionFindMaxEdges")
+  }
+
+  /** Two complete groups of 200 nodes: 39,800 distinct (a < b) edges, over
+    * [[denseCap]], while each partition's spanning forest has at most
+    * 398 rows, so even 64 partitions' forests fit under it. */
+  private lazy val denseEdges: Seq[(Long, Long)] = {
+    val groups = (0 until 400).map(i => Hashing.stable(i)).grouped(200).toSeq
+    for (g <- groups; i <- g.indices; j <- i + 1 until g.size)
+      yield (math.min(g(i), g(j)), math.max(g(i), g(j)))
+  }
+  private val denseCap = 30000
+
+  /** `components` over `edges`, stored in `parts` partitions, with the edge
+    * cap at [[denseCap]]; and the stages it ran that are not the probe's.
+    * The driver path runs the probe's `take` jobs only, while every star-pair
+    * adds checkpoint, window and signature stages. */
+  private def probedComponents(edges: Seq[(Long, Long)], parts: Int): (DataFrame, Seq[String]) = {
+    val stored = edges.toDF("a", "b").repartition(parts).localCheckpoint()
+    val prof = StageProfiler.attach(spark.sparkContext)
+    try withConf("spark.graft.cc.driverUnionFindMaxEdges" -> denseCap.toString) {
+      val comps = ConnectedComponents.components(spark, stored, inputNormalized = true)
+      (comps, prof.stages.map(_.name).filterNot(_.startsWith("take at ConnectedComponents")))
+    } finally {
+      spark.sparkContext.removeSparkListener(prof)
+      graft.util.Checkpoints.unpersistCheckpoint(stored)
+    }
+  }
+
+  test("CC probe contracts each partition to a spanning forest: dense groups over the edge cap take the driver path") {
+    val nodes = denseEdges.flatMap(e => Seq(e._1, e._2)).distinct
+    assert(denseEdges.size > denseCap)
+    val oracle = UnionFindOracle.components(nodes, denseEdges)
+    for (parts <- Seq(1, 7, 64)) {
+      val (comps, starStages) = probedComponents(denseEdges, parts)
+      val leaves = comps.queryExecution.analyzed.collectLeaves()
+      assert(leaves.forall(_.isInstanceOf[LocalRelation]), s"$parts partitions: $leaves")
+      assert(starStages.isEmpty, s"$parts partitions ran stages beyond the probe: $starStages")
+      val got = ConnectedComponents.assign(nodes.toDF("row_id"), comps)
+        .as[(Long, Long)].collect().toMap
+      assert(got == oracle, s"$parts partitions")
+    }
+  }
+
+  test("CC spanning-forest probe keeps the node set and labels on an inputNormalized breach") {
+    // duplicates, reversed edges and self-loops under inputNormalized, plus
+    // nodes whose only edge is a self-loop: the driver path must still
+    // name every endpoint and give the oracle labels
+    val loners = (400 until 405).map(i => Hashing.stable(i))
+    val breach = denseEdges ++ denseEdges.take(500) ++ denseEdges.take(2000).map(_.swap) ++
+      denseEdges.take(50).map(e => (e._1, e._1)) ++ loners.map(x => (x, x))
+    val endpoints = breach.flatMap(e => Seq(e._1, e._2)).distinct
+    val nodes = endpoints ++ (405 until 410).map(i => Hashing.stable(i))
+    val oracle = UnionFindOracle.components(nodes, breach)
+    for (parts <- Seq(1, 7)) {
+      val (comps, starStages) = probedComponents(breach, parts)
+      assert(starStages.isEmpty, s"$parts partitions ran stages beyond the probe: $starStages")
+      assert(comps.as[(Long, Long)].collect().map(_._1).toSet == endpoints.toSet,
+        s"$parts partitions: node set changed")
+      val got = ConnectedComponents.assign(nodes.toDF("row_id"), comps)
+        .as[(Long, Long)].collect().toMap
+      assert(got == oracle, s"$parts partitions")
+    }
   }
 
   test("CC retire hook fires once per star-pair materialization (round 6)") {
