@@ -97,7 +97,7 @@ object CheckpointedPipeline {
     // column-pruned parquet scans of the stage-1 artifacts.
     val features = spark.read.parquet(s"$workDir/features")
     val caches = Pipeline.buildCaches(spark, features.select("row_id", "minhash", "phash"),
-      features.select("row_id", "caption"), cfg)
+      features.select("row_id", "caption"))
 
     // ---- Stage 2-4: clustering rounds (round = resumable unit). ----
     // The pass state is ONE relation (row_id, cluster_id, score); the small

@@ -1,9 +1,8 @@
 package graft.cluster
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-import graft.lsh.Banding
 import graft.model.GraftConfig
 import graft.util.Hashing
 
@@ -86,14 +85,5 @@ object ChunkPhase {
         xxhash64(lit(rs), cmnSubstr(col("caption"), a1, w1, t1))
       }
     }
-  }
-
-  /** Standalone fused candidate pairs from the chunk rounds (the pipeline
-    * fuses [[hashCols]] with the LSH bands instead). */
-  def candidatePairs(features: DataFrame, cfg: GraftConfig, n: Long, capLen: Int): DataFrame = {
-    val buckets = features.select(
-      col("row_id"),
-      explode(array(hashCols(cfg, n, capLen): _*)).as("band_hash"))
-    Banding.chainPairs(buckets, cfg.saltShards)
   }
 }

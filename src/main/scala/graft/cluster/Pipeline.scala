@@ -213,10 +213,6 @@ object Pipeline {
     * (ADVICE r2). */
   private[graft] val RepBroadcastMaxRows = 4000000L
 
-  /** Passes whose focus estimate is at most this many rows run under
-    * [[withSmallPassConf]]. */
-  private[graft] val SmallPassFocusRows = 100000L
-
   /** The per-pass score-delta relation holds one row per DISTINCT verified-
     * pair endpoint — at most 2·nVerified rows — so it may ride a broadcast
     * hint only when that bound stays within [[RepBroadcastMaxRows]]
@@ -224,21 +220,18 @@ object Pipeline {
   private[graft] def deltasBroadcastable(nVerified: Long): Boolean =
     2L * nVerified <= RepBroadcastMaxRows
 
-  /** Late macro passes touch a few-thousand-row focus set across ~15
-    * barrier-separated stages; at that size the wall is per-stage ADAPTIVE
-    * REPLANNING + task-launch latency, not work (the ~91 s core-count-
-    * invariant residual pass, VERDICT r3 #2). Passes whose focus estimate
-    * is below [[SmallPassFocusRows]] therefore run with AQE off and a
-    * small static shuffle-partition count; both are runtime confs restored
-    * afterwards, so large passes keep AQE's skew/coalesce machinery.
+  /** Runs `f` with AQE off and 16 static shuffle partitions when `small`,
+    * restoring both session confs afterwards. Its one caller is the frozen
+    * `SparkEntry.smallJob`, which wraps the fixture document queries
+    * (DocDedup, doc CC, metrics) whose inputs are too small for adaptive
+    * replanning to pay for itself. The pipeline's own passes run under the
+    * session's conf.
     *
-    * CONCURRENCY (ADVICE r4): the flip mutates SESSION-GLOBAL runtime conf
-    * and assumes the single-threaded driver loop this pipeline (and the
-    * demo entry points) run under — a concurrent query on the same
-    * SparkSession during a small pass would silently observe AQE off / 16
-    * shuffle partitions, and nested or parallel use races the
+    * CONCURRENCY (ADVICE r4): the flip mutates SESSION-GLOBAL runtime conf,
+    * so a concurrent query on the same SparkSession would silently observe
+    * AQE off / 16 shuffle partitions, and nested or parallel use races the
     * save-and-restore. Callers that share a session across threads should
-    * run small passes on `spark.newSession()` instead. */
+    * run on `spark.newSession()` instead. */
   private[graft] def withSmallPassConf[A](spark: SparkSession, small: Boolean)(f: => A): A =
     if (!small) f
     else {
@@ -325,8 +318,7 @@ object Pipeline {
     * can pass while the caches disagree on cardinality); the run fails
     * loudly on mismatch. The captions job also takes the typical caption
     * length for the chunk phase. */
-  private[cluster] def buildCaches(spark: SparkSession, hot: DataFrame, cold: DataFrame,
-                                   cfg: GraftConfig): Caches = {
+  private[cluster] def buildCaches(spark: SparkSession, hot: DataFrame, cold: DataFrame): Caches = {
     val features = hot.repartition(col("row_id")).persist(StorageLevel.MEMORY_AND_DISK)
     val fRow = features.agg(
       count(lit(1)), coalesce(expr("bit_xor(row_id)"), lit(0L))).head()
@@ -348,9 +340,7 @@ object Pipeline {
     // (their exchanges — the shuffles a future recompute of an evicted
     // cache block could still need); everything created after this point
     // is per-pass and provably dead at each pass boundary.
-    val keep =
-      if (cfg.retireShuffles) org.apache.spark.graft.ShuffleRetirement.liveIds(spark.sparkContext)
-      else Set.empty[Int]
+    val keep = org.apache.spark.graft.ShuffleRetirement.liveIds(spark.sparkContext)
     Caches(features, captions, n, if (n == 0) 0 else capRow.getInt(1), keep)
   }
 
@@ -619,7 +609,7 @@ object Pipeline {
     val hot = MinHash.featurize(spark, images, cfg).toDF().drop("caption")
     val cold = images.select(
       graft.feat.RowIds.rowIdCol(col("image_id")).as("row_id"), col("caption"))
-    buildCaches(spark, hot, cold, cfg)
+    buildCaches(spark, hot, cold)
   }
 
   /** The driver loop — the reference's `run()` (`:697-711`): round 0, then
@@ -636,7 +626,7 @@ object Pipeline {
   private[cluster] def loop(spark: SparkSession, c: Caches, cfg: GraftConfig,
       resume: Option[(State, PhaseStat, Int)] = None,
       save: (State, PhaseStat, Int) => Unit = (_, _, _) => ()): Result = {
-    def retire(): Unit = if (cfg.retireShuffles) {
+    def retire(): Unit = {
       org.apache.spark.graft.ShuffleRetirement
         .retireAllExcept(spark.sparkContext, c.keep); ()
     }
@@ -652,16 +642,6 @@ object Pipeline {
       retire()
     }
 
-    // Round-8 NEGATIVE result, kept on record (guide §1.2 — measure, don't
-    // assume): wrapping round 0 in the small-pass conf at fixture scale
-    // (AQE off + 16 static shuffle partitions) made round 0 itself faster
-    // (5.0 vs 6.4 s at the 15k-row bench corpus, in-JVM A/B, BENCH.md
-    // round 8) but the downstream macro pass SLOWER (9.6 vs 7.0 s) and the
-    // run +21 jobs: the state checkpoints materialize 16-partitioned
-    // instead of AQE-coalesced to ~1, and every later pass pays the wider
-    // task fan on a few-thousand-row relation. Round 0 therefore stays on the
-    // session conf; only the late macro passes flip (below), as measured
-    // in round 3.
     var (st, last, bad) = resume.getOrElse {
       val (st0, stat0) = timed(initialState(spark, c, cfg, retire))
       commit(st0, stat0, 0)
@@ -673,9 +653,7 @@ object Pipeline {
       val from = last.macroRound + 1
       val rounds = from until (from + ctl.passSize(from, bad, last.clusters))
       val (st2, stat) = timed(
-        withSmallPassConf(spark, last.clusters <= SmallPassFocusRows) {
-          macroStep(spark, c, st, cfg, rounds, last.clusters, last.singles, retire)
-        })
+        macroStep(spark, c, st, cfg, rounds, last.clusters, last.singles, retire))
       val (nbad, stop) = ctl.stepPass(bad, rounds, last.singles, stat)
       commit(st2, stat, nbad)
       st = st2; last = stat; bad = nbad; done = stop

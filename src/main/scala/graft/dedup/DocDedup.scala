@@ -26,15 +26,6 @@ object DocDedup {
       count(lit(1)).over(w).as("group_size"))
   }
 
-  /** Character q-gram shingles of a text column, hashed to Long. */
-  def shingleDocs(spark: SparkSession, docs: DataFrame, q: Int): DataFrame = {
-    import spark.implicits._
-    docs.select(col("doc_id"), col("text")).as[(Long, String)]
-      .mapPartitions(_.map { case (id, t) =>
-        (id, graft.feat.Shingler.captionShingles(t, q))
-      }).toDF("row_id", "shingles")
-  }
-
   /** MinHash + LSH dedup: shingle → MinHash in mapPartitions → fused banding
     * → exact-Jaccard verification on candidates → connected components.
     * Same scheme as the image pipeline, verification on raw Jaccard. */

@@ -111,9 +111,6 @@ object TableIO {
       .withColumn("part_id", pmod(xxhash64(col("image_id")), lit(numParts)).cast("int"))
       .write.mode("overwrite").partitionBy("part_id").parquet(path)
 
-  def readImages(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-
   /** Distinct part_id values present in a partitioned table — from the
     * directory listing (partition pruning metadata), not a data scan. */
   def listPartitions(spark: SparkSession, path: String): Seq[Int] =

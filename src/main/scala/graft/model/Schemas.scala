@@ -1,7 +1,5 @@
 package graft.model
 
-import org.apache.spark.sql.types._
-
 /** Core row types of the engine (SURVEY.md §1.2).
   *
   * The input table shape is fixed by the north rule (BASELINE.json
@@ -42,29 +40,6 @@ final case class FeatureRow(
     minhash: Array[Int], // length m; 32-bit lanes (MinHash.signature doc)
     phash: Long
 )
-
-final case class Assignment(row_id: Long, cluster_id: Long)
-
-final case class CandidatePair(a: Long, b: Long) // normalized a < b
-
-object Schemas {
-  /** The north-rule input schema (BASELINE.json input_hint). */
-  val imageSchema: StructType = StructType(Seq(
-    StructField("image_id", StringType, nullable = false),
-    StructField("bytes", BinaryType, nullable = false),
-    StructField("w", IntegerType, nullable = false),
-    StructField("h", IntegerType, nullable = false),
-    StructField("fmt", StringType, nullable = false),
-    StructField("caption", StringType, nullable = false),
-    StructField("phash", LongType, nullable = false)
-  ))
-
-  val truthSchema: StructType = StructType(Seq(
-    StructField("row_id", LongType, nullable = false),
-    StructField("image_id", StringType, nullable = false),
-    StructField("true_cluster_id", LongType, nullable = false)
-  ))
-}
 
 /** Pipeline hyper-parameters, defaults mirroring the reference
   * (`/root/reference/lsh_based_clustering.py:64` — q=6, k=3, m=40, L=32,
@@ -109,10 +84,5 @@ final case class GraftConfig(
                                    // Tune to the executor-disk budget; >1
                                    // only pays at the 10M+-row scales where
                                    // one query's intermediates outgrow disk
-    retireShuffles: Boolean = true, // retire provably-dead shuffle files at
-                                   // pass boundaries (GC-driven reclamation
-                                   // measured to never fire mid-run; peak
-                                   // scratch = CUMULATIVE shuffle bytes
-                                   // without this — see ShuffleRetirement)
     seed: Long = 42L
 )

@@ -17,15 +17,22 @@ import graft.cluster.ConnectedComponents
   * lack single-variable attribution. This tool isolates it: a
   * deterministic chain-graph edge set (the exact shape V4 bucket chaining
   * emits — G spanning chains of length S−1, worst case for star-step
-  * depth), `components()` with the production retire hook, and a 2 s
-  * scratch-disk sampler. Two runs on two engine revisions give the CC
-  * delta and nothing else.
+  * depth), `components()` with the production retire hook, and a 0.5 s
+  * sampler of this run's own scratch. Two runs on two engine revisions
+  * give the CC delta and nothing else.
+  *
+  * The run gets a fresh `spark.local.dir` of its own, created under the
+  * `-Dspark.local.dir` given to the JVM (else `java.io.tmpdir`) and removed
+  * on exit; the sampler sums the sizes of the files under it, so other
+  * writers on the same volume do not count as CC scratch.
+  * `SPARK_LOCAL_DIRS` would override that directory, so it must be unset.
   *
   * Usage: runMain graft.tools.CcScratchBench <nodes> <chainLen> <cpus>
   *   e.g.   runMain graft.tools.CcScratchBench 8000000 64 32
   * Prints one JSON line:
   *   {"metric":"cc_scratch","nodes":…,"edges":…,"chain_len":…,"cpus":…,
-  *    "components":…,"sec":…,"baseline_gb":…,"peak_inflight_gb":…}
+  *    "components":…,"sec":…,"baseline_gb":…,"peak_inflight_gb":…,
+  *    "sampled_path":…}
   */
 object CcScratchBench {
 
@@ -34,10 +41,16 @@ object CcScratchBench {
     val chainLen = if (args.length > 1) args(1).toInt else 64
     val cpus = if (args.length > 2) args(2).toInt else 32
     require(chainLen >= 2, "chainLen must be >= 2")
+    require(!sys.env.contains("SPARK_LOCAL_DIRS"),
+      "SPARK_LOCAL_DIRS overrides the run's own spark.local.dir; unset it")
+    val scratchDir = Files.createTempDirectory(
+      Paths.get(sys.props.getOrElse("spark.local.dir", sys.props("java.io.tmpdir"))
+        .split(",").head.trim), "graft-cc-scratch").toFile
 
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName("graft-cc-scratch")
+      .config("spark.local.dir", scratchDir.getPath)
       // mirror the ScalingBench production confs so the measured window
       // matches what the pipeline's CC phase sees (incl. the round-7
       // lean-heap storageFraction)
@@ -67,24 +80,16 @@ object CcScratchBench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    // scratch sampler: bytes used on the filesystem backing Spark's
-    // ACTUAL scratch location — resolved from spark.local.dir /
-    // SPARK_LOCAL_DIRS, falling back to java.io.tmpdir (ADVICE r7: the
-    // round-7 version always sampled java.io.tmpdir, which silently
-    // measures the wrong volume when the local dirs point elsewhere).
-    // The sampled path is reported in the JSON so a reader can tell.
-    val scratchPath = spark.conf.getOption("spark.local.dir")
-      .orElse(sys.env.get("SPARK_LOCAL_DIRS"))
-      .map(_.split(",").head.trim)
-      .getOrElse(sys.props.getOrElse("java.io.tmpdir", "/tmp"))
-    val store = Files.getFileStore(Paths.get(scratchPath))
-    def usedBytes(): Long = store.getTotalSpace - store.getUsableSpace
+    // scratch sampler: summed size of every file under the run's own local
+    // dir (files can vanish mid-walk: a gone file reads as 0 bytes)
+    def usedBytes(f: java.io.File = scratchDir): Long =
+      Option(f.listFiles()).fold(f.length())(_.map(usedBytes).sum)
     val baseline = usedBytes()
     val peak = new AtomicLong(baseline)
     val sampler = new Thread(() => {
       try while (true) {
         peak.updateAndGet(math.max(_, usedBytes()))
-        Thread.sleep(2000)
+        Thread.sleep(500)
       } catch { case _: InterruptedException => () }
     }, "cc-scratch-sampler")
     sampler.setDaemon(true)
@@ -119,7 +124,8 @@ object CcScratchBench {
     val expected = (nodes + chainLen - 1) / chainLen
     require(nComps == expected,
       s"CC returned $nComps components, expected $expected — measurement invalid")
-    println(f"""{"metric":"cc_scratch","nodes":$nodes,"edges":$eCount,"chain_len":$chainLen,"cpus":$cpus,"components":$nComps,"sec":$sec%.2f,"baseline_gb":${baseline / 1e9}%.2f,"peak_inflight_gb":${(peak.get() - baseline) / 1e9}%.2f,"sampled_path":"$scratchPath"}""")
+    println(f"""{"metric":"cc_scratch","nodes":$nodes,"edges":$eCount,"chain_len":$chainLen,"cpus":$cpus,"components":$nComps,"sec":$sec%.2f,"baseline_gb":${baseline / 1e9}%.4f,"peak_inflight_gb":${(peak.get() - baseline) / 1e9}%.4f,"sampled_path":"$scratchDir"}""")
     spark.stop()
+    org.apache.commons.io.FileUtils.deleteDirectory(scratchDir)
   }
 }

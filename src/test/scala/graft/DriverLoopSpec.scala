@@ -2,6 +2,11 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.graft.StageProfiler
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+
 import graft.cluster.{CheckpointedPipeline, Pipeline}
 import graft.gen.SyntheticCorpus
 import graft.io.TableIO
@@ -63,7 +68,8 @@ class DriverLoopSpec extends SparkSpec {
   test("shuffle partitions 1, 7 and 64 give the identical assign and every PhaseStat") {
     // CC's probe contracts each edge partition to a spanning forest, so how
     // the edges are partitioned is the axis that could change its result;
-    // coalescing is off so every stage keeps the partition count it is given
+    // coalescing is off so every stage keeps the partition count it is given,
+    // round 0 and every macro pass alike (all run under the session conf)
     val cfg = GraftConfig(seed = 7L)
     val images = spark.read.parquet(imagesPath)
     val runs = Seq(1, 7, 64).map { parts =>
@@ -77,6 +83,37 @@ class DriverLoopSpec extends SparkSpec {
     for ((parts, (stats, assign)) <- runs.tail) {
       assert(stats == stats1, s"$parts partitions")
       assert(assign == assign1, s"$parts partitions")
+    }
+  }
+
+  test("every pipeline job runs under the session's shuffle partitions and AQE setting") {
+    // SQL executions copy the session's explicitly set SQL confs into each
+    // job's properties, so the job-start event shows the conf a job ran
+    // under; jobs run straight on an RDD carry none and are skipped
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Seq[Option[String]]]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(keys.map(k => Option(e.properties).flatMap(p => Option(p.getProperty(k)))))
+    }
+    val sc = spark.sparkContext
+    val prof = StageProfiler.attach(sc)
+    sc.addSparkListener(listener)
+    try {
+      val stats = withConf(keys.head -> "7", keys(1) -> "true") {
+        val res = Pipeline.run(spark, spark.read.parquet(imagesPath), GraftConfig(seed = 7L))
+        assignOf(res)
+        res.stats
+      }
+      assert(stats.exists(_.macroRound > 0), s"no macro pass ran: $stats")
+      assert(prof.jobs > 0) // drains the bus: every job start is recorded
+      val confs = seen.asScala.toSeq.filter(_.exists(_.isDefined))
+      info(s"${confs.size} of ${seen.size} jobs carry the SQL confs")
+      assert(confs.nonEmpty)
+      assert(confs.forall(_ == Seq(Some("7"), Some("true"))), confs.distinct)
+    } finally {
+      sc.removeSparkListener(listener)
+      sc.removeSparkListener(prof)
     }
   }
 }

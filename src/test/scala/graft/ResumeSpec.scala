@@ -70,7 +70,7 @@ class ResumeSpec extends SparkSpec {
     val base = Files.createTempDirectory("graft_resume_ret").toString
     val imagesPath = s"$base/images"
     val workDir = s"$base/work"
-    val cfg = GraftConfig(seed = 7L) // retireShuffles = true (default)
+    val cfg = GraftConfig(seed = 7L) // the driver loop always retires shuffles
 
     val gen = SyntheticCorpus.generate(spark, SyntheticCorpus.GenConfig(groups = 60)).cache()
     TableIO.writeImages(SyntheticCorpus.imagesOf(gen), imagesPath, numParts = 4)
