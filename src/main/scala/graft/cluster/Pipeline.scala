@@ -167,43 +167,45 @@ object Pipeline {
     * this hoists those merges out of the hot path). Exact string keys in
     * the window — no hash, no collision risk.
     *
-    * Both returned relations are eagerly localCheckpoint'ed, not merely
-    * persisted (ADVICE r4): they stay live across the round-0 batch loop's
-    * mid-pass shuffle retirements, and a persisted-only cache there would
-    * hold shuffle-backed lineage it could no longer recompute through.
-    * Truncation also keeps the round-2 fix (without materialization the two
-    * (caption, phash) window passes over the full corpus ran twice).
+    * ONE query over one read of the corpus: [[Banding.chainPredecessors]]
+    * gives each row its chain predecessor `x`, and the representative is
+    * the minimum of the class's shard minima, taken by a window with the
+    * second chain window's partitioning (no extra exchange or sort). The
+    * (x, row_id, rep) rows — one per input row — are eagerly
+    * localCheckpoint'ed, not merely persisted (ADVICE r4): they stay live
+    * across the round-0 batch loop's mid-pass shuffle retirements, and a
+    * persisted-only cache there would hold shuffle-backed lineage it could
+    * no longer recompute through.
     *
-    * Returns (identity edges — checkpointed, caller frees via
-    * [[graft.util.Checkpoints.unpersistCheckpoint]]; representative row ids
-    * — checkpointed, same contract; duplicate count). */
-  private def collapseExactDups(features: DataFrame, captions: DataFrame,
+    * Returns (identity edges; representative row ids — two projections of
+    * the one checkpoint, each freed via
+    * [[graft.util.Checkpoints.unpersistCheckpoint]]; duplicate count
+    * = n − |reps|). */
+  private[graft] def collapseExactDups(features: DataFrame, captions: DataFrame,
       saltShards: Int): (DataFrame, DataFrame, Long) = {
+    val chained = exactDupChains(features, captions, saltShards).localCheckpoint()
+    val linked = chained.where(col("x").isNotNull)
+    val identity = linked
+      .select(least(col("x"), col("row_id")).as("a"), greatest(col("x"), col("row_id")).as("b"))
+    val repIds = chained.where(col("rep")).select("row_id")
+    val nDup = linked.count() // cheap checkpoint scan
+    (identity, repIds, nDup)
+  }
+
+  /** The (x, row_id, rep) query [[collapseExactDups]] checkpoints. */
+  private[graft] def exactDupChains(features: DataFrame, captions: DataFrame,
+      saltShards: Int): DataFrame = {
     // both caches are hash-partitioned on row_id, so this join is
     // exchange-free; it is the ONE full-corpus caption scan of round 0
     val salted = features.select(col("row_id"), col("phash"))
       .join(captions, "row_id")
       .withColumn("salt", pmod(xxhash64(col("row_id")), lit(saltShards)))
-    val wShard = Window.partitionBy("caption", "phash", "salt").orderBy("row_id")
-    val intra = salted
-      .withColumn("x", lag("row_id", 1).over(wShard))
-      .where(col("x").isNotNull)
-      .select(col("x"), col("row_id").as("y"))
-    val shardMins = salted.groupBy("caption", "phash", "salt")
-      .agg(min("row_id").as("mn")) // map-side partial agg: tiny shuffle
-    val wInter = Window.partitionBy("caption", "phash").orderBy("salt", "mn")
-    val inter = shardMins
-      .withColumn("x", lag("mn", 1).over(wInter))
-      .where(col("x").isNotNull)
-      .select(col("x"), col("mn").as("y"))
-    val identity = intra.select("x", "y").unionAll(inter)
-      .select(least(col("x"), col("y")).as("a"), greatest(col("x"), col("y")).as("b"))
-      .localCheckpoint()
-    val repIds = shardMins.groupBy("caption", "phash")
-      .agg(min("mn").as("row_id")).select("row_id")
-      .localCheckpoint()
-    val nDup = identity.count() // cheap checkpoint scan; = n - |reps|
-    (identity, repIds, nDup)
+    val keys = Seq("caption", "phash")
+    val minima = Window.partitionBy((keys :+ "k").map(col): _*).orderBy("salt", "row_id")
+      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    Banding.chainPredecessors(salted, keys)
+      .select(col("x"), col("row_id"),
+        (col("k") === -1L && col("row_id") === min("row_id").over(minima)).as("rep"))
   }
 
   /** Rep-id sets up to this many rows ride a broadcast hint so the feature
@@ -481,17 +483,13 @@ object Pipeline {
       .select(col("row_id"), col("rk"))
     val focus = singlesDf.unionAll(reps)
 
-    // persisted: chainPairs scans the explode's input twice (intra window +
-    // shard-min aggregate), and each scan would otherwise redo the focus joins
-    val focusFeatures = features.join(focus, "row_id")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
     // Fused candidate generation: ONE explode of the focus rows, each over
     // the (seed, lanes) bands its rank draws in this pass — singles every
     // round's L bands, a rank-r rep those of the rounds that sample rank r.
     // Per-(macro round, band) seeds inside the hash keep buckets of
-    // different rounds disjoint. It feeds ONE salted chaining pass — the
-    // same candidate draws a sequential run of these rounds would make
+    // different rounds disjoint. It feeds ONE salted chaining pass, which
+    // reads the explode once (so the focus join runs once, unpersisted) —
+    // the same candidate draws a sequential run of these rounds would make
     // (modulo focus refresh between rounds, which fusion trades for a T×
     // cut in stage-barrier latency). Rep draws CAN diverge from the
     // sequential schedule: ranks use pass-start scores and pass-start
@@ -502,7 +500,7 @@ object Pipeline {
     // scale, not an invariant (ADVICE r3; watch recall if fusedBandRowCap
     // ever allows very wide passes on skewed corpora).
     val cand = Banding.chainPairs(
-      Banding.explodePassBands(focusFeatures, cfg, rounds), cfg.saltShards)
+      Banding.explodePassBands(features.join(focus, "row_id"), cfg, rounds), cfg.saltShards)
     // EAGER localCheckpoint, not persist (ADVICE r4): `verified` stays live
     // across this pass's early retirement below, and a persisted-only cache
     // would keep shuffle-backed lineage it could no longer recompute
@@ -514,7 +512,6 @@ object Pipeline {
       cfg.distanceThreshold, cfg.hammingThreshold, cfg.minLcs)
       .localCheckpoint()
     val nVerified = verified.count() // cheap: scans the checkpoint blocks
-    focusFeatures.unpersist()
 
     // Incremental CC on the LABEL graph: new pairs touch existing clusters,
     // so mapping endpoints to their current labels gives a graph with

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.graft.StageProfiler
@@ -22,7 +20,7 @@ class DriverLoopSpec extends SparkSpec {
   private val capKey = "spark.graft.cc.driverUnionFindMaxEdges"
 
   private lazy val imagesPath: String = {
-    val path = Files.createTempDirectory("graft_driver_loop").resolve("images").toString
+    val path = tempDir("graft_driver_loop").resolve("images").toString
     val gen = SyntheticCorpus.generate(spark, SyntheticCorpus.GenConfig(groups = 60)).cache()
     TableIO.writeImages(SyntheticCorpus.imagesOf(gen), path, numParts = 4)
     gen.unpersist()
@@ -38,7 +36,7 @@ class DriverLoopSpec extends SparkSpec {
   test("Pipeline.run and CheckpointedPipeline.run agree on assign and every PhaseStat; durable passes are timed") {
     val cfg = GraftConfig(seed = 7L)
     val straight = Pipeline.run(spark, spark.read.parquet(imagesPath), cfg)
-    val workDir = Files.createTempDirectory("graft_driver_loop_wd").toString
+    val workDir = tempDir("graft_driver_loop_wd").toString
     val (durable, rep) = CheckpointedPipeline.run(spark, imagesPath, workDir, cfg)
     val untimed = (r: Pipeline.Result) => r.stats.map(_.copy(seconds = 0.0))
     assert(untimed(durable) == untimed(straight))

@@ -111,7 +111,7 @@ class EvyatSpec extends SparkSpec {
     val keyed = res.assign.join(strands, "row_id")
       .select(col("cluster_id"), col("strand").as("member"),
         col("strand").as("rep_candidate"))
-    val out = Files.createTempDirectory("evyat_export").resolve("evyat_out.txt")
+    val out = tempDir("evyat_export").resolve("evyat_out.txt")
     TableIO.exportEvyat(spark, keyed, out.toString)
 
     val (reads2, _) = EvyatIO.readEvyat(spark, out.toString)

@@ -1,13 +1,11 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.graft.StageProfiler
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec, SparkPlan}
+import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.aggregate.HashAggregateExec
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -27,7 +25,7 @@ class PlanShapeSpec extends SparkSpec {
   import spark.implicits._
 
   private lazy val images: DataFrame = {
-    val path = Files.createTempDirectory("graft_plan_shape").resolve("images").toString
+    val path = tempDir("graft_plan_shape").resolve("images").toString
     val gen = SyntheticCorpus.generate(spark, SyntheticCorpus.GenConfig(groups = 20))
     TableIO.writeImages(SyntheticCorpus.imagesOf(gen), path, numParts = 4)
     spark.read.parquet(path)
@@ -63,17 +61,23 @@ class PlanShapeSpec extends SparkSpec {
     assert(s.head.partitionFilters.nonEmpty, s.head)
   }
 
-  /** The exploded rows cross exactly one wide exchange, the
-    * (band_hash, salt) window; the other exchange the explode feeds carries
-    * partial-aggregate shard minima (≤ saltShards rows per bucket). */
+  /** The salted chain over an explode: the exploded rows cross exactly one
+    * exchange, the (band_hash, salt) window's; the second window's
+    * (band_hash, k) exchange reads that window's output; and no aggregate
+    * but the pair distinct's runs above the explode. */
   private def assertOneWideBandExchange(p: SparkPlan): Unit = {
     val fed = p.collect {
       case e: ShuffleExchangeExec if mapSide(e).exists(_.isInstanceOf[GenerateExec]) => e
     }
-    val (minima, wide) = fed.partition(e => mapSide(e).exists(isPartialAgg))
-    assert(wide.size == 1, s"exploded rows cross ${wide.size} exchanges:\n$p")
-    assert(hashKeys(wide.head) == Seq("band_hash", "salt"))
-    assert(minima.size == 1, s"expected one shard-minima exchange:\n$p")
+    assert(fed.size == 1, s"exploded rows cross ${fed.size} exchanges:\n$p")
+    assert(hashKeys(fed.head) == Seq("band_hash", "salt"))
+    val second = p.collect { case e: ShuffleExchangeExec if mapSide(e).contains(fed.head) => e }
+    assert(second.map(hashKeys) == Seq(Seq("band_hash", "k")), s"second window exchange:\n$p")
+    val aggs = p.collect {
+      case a: HashAggregateExec if a.exists(_.isInstanceOf[GenerateExec]) &&
+        a.groupingExpressions.map(_.name) != Seq("a", "b") => a
+    }
+    assert(aggs.isEmpty, s"an aggregate between the explode and the pair distinct:\n$p")
   }
 
   test("banding: the exploded L×n relation crosses exactly one exchange, the (band_hash, salt) window") {
@@ -92,9 +96,8 @@ class PlanShapeSpec extends SparkSpec {
     def passPlan(rounds: Seq[Int]): SparkPlan =
       plan(Banding.chainPairs(Banding.explodePassBands(focus, cfg, rounds), cfg.saltShards))
     val (one, ten) = (passPlan(Seq(1)), passPlan(1 to 10))
-    // chainPairs reads its input twice (window + shard minima): one explode
-    // on each read, whatever the number of rounds
-    assert(generates(ten) == 2, s"expected one explode per read:\n$ten")
+    // chainPairs reads its input once: one explode, whatever the number of rounds
+    assert(generates(ten) == 1, s"expected one explode:\n$ten")
     assertOneWideBandExchange(ten)
     def nodes(p: SparkPlan): Seq[String] = p.collect { case n => n.nodeName }
     assert(nodes(one) == nodes(ten), s"T = 1:\n$one\nT = 10:\n$ten")
@@ -103,6 +106,24 @@ class PlanShapeSpec extends SparkSpec {
   private def hashKeys(e: ShuffleExchangeExec): Seq[String] = e.outputPartitioning match {
     case h: HashPartitioning => h.expressions.collect { case a: Attribute => a.name }
     case other => fail(s"exchange is not hash-partitioned: $other")
+  }
+
+  test("exact-dup collapse: one read of each cache, two window exchanges and sorts, no aggregate") {
+    val cfg = GraftConfig()
+    val c = Pipeline.caches(spark, images, cfg)
+    try {
+      val p = plan(Pipeline.exactDupChains(c.features, c.captions, cfg.saltShards))
+      assert(p.collect { case s: InMemoryTableScanExec => s }.size == 2, p)
+      val exchanges = p.collect { case e: ShuffleExchangeExec => hashKeys(e) }
+      assert(exchanges == Seq(Seq("caption", "phash", "k"), Seq("caption", "phash", "salt")), p)
+      // the rep's min window shares the second chain window's partitioning
+      // and sort: no third sort on the class keys
+      val sorts = p.collect {
+        case s: SortExec if s.sortOrder.headOption.exists(_.child.references.exists(_.name == "caption")) => s
+      }
+      assert(sorts.size == 2, p)
+      assert(p.collect { case a: HashAggregateExec => a }.isEmpty, p)
+    } finally unpersist(c)
   }
 
   /** Round-0 candidates (checkpointed, so a plan over them holds only the
@@ -164,7 +185,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("q1_agg pushes its projection into the scan and aggregates partially before the exchange") {
     // q1_agg has no predicate, so its scan pushes columns, not filters
-    val dir = Files.createTempDirectory("graft_plan_q1").toString
+    val dir = tempDir("graft_plan_q1").toString
     Seq(("A", "F", 1.0, 10.0, 0.1, 0.0, 1L, "x"), ("N", "O", 2.0, 20.0, 0.2, 0.0, 2L, "y"))
       .toDF("l_returnflag", "l_linestatus", "l_quantity", "l_extendedprice",
         "l_discount", "l_tax", "l_orderkey", "l_comment")

@@ -16,7 +16,7 @@ class ResumeSpec extends SparkSpec {
     df.as[(Long, Long)].collect().groupBy(_._2).values.map(_.map(_._1).toSet).toSet
 
   test("kill+resume reproduces the identical clustering (per-partition ledger)") {
-    val base = Files.createTempDirectory("graft_resume").toString
+    val base = tempDir("graft_resume").toString
     val imagesPath = s"$base/images"
     val workDir = s"$base/work"
     val cfg = GraftConfig(seed = 7L)
@@ -67,7 +67,7 @@ class ResumeSpec extends SparkSpec {
     // what a real crash's process death implies), tear the last pass's
     // ledger commit (commit-last ⇒ artifact may exist without its entry),
     // then resume and demand the pinned clustering.
-    val base = Files.createTempDirectory("graft_resume_ret").toString
+    val base = tempDir("graft_resume_ret").toString
     val imagesPath = s"$base/images"
     val workDir = s"$base/work"
     val cfg = GraftConfig(seed = 7L) // the driver loop always retires shuffles
@@ -110,7 +110,7 @@ class ResumeSpec extends SparkSpec {
     // a spec. Both paths: (a) stale format + clustering rounds present →
     // loud refusal; (b) stale format with rounds cleared → exactly the
     // stale partition recomputes and the clustering is reproduced.
-    val base = Files.createTempDirectory("graft_sigfmt").toString
+    val base = tempDir("graft_sigfmt").toString
     val imagesPath = s"$base/images"
     val workDir = s"$base/work"
     // fixed small budget: this test asserts ledger-guard behavior, not
@@ -166,7 +166,7 @@ class ResumeSpec extends SparkSpec {
   }
 
   test("ledger entries carry per-partition lineage metrics and survive rewrite") {
-    val base = Files.createTempDirectory("graft_ledger").toString
+    val base = tempDir("graft_ledger").toString
     TableIO.writeEntry(base, TableIO.LedgerEntry(
       "features_0", "features", 0, 123L, Map("m" -> "40", "config_seed" -> "7")))
     TableIO.writeEntry(base, TableIO.LedgerEntry(
@@ -179,7 +179,7 @@ class ResumeSpec extends SparkSpec {
   }
 
   test("structured ledger reader round-trips writeEntry and fails loudly on drift") {
-    val base = Files.createTempDirectory("graft_ledger_rt").toString
+    val base = tempDir("graft_ledger_rt").toString
     val e = TableIO.LedgerEntry("round_3", "round", -1, 42L,
       Map("singles" -> "7", "workRate" -> "0.125", "badRounds" -> "2",
           "weird \"quoted\"\\key" -> "tab\there"))
@@ -198,7 +198,7 @@ class ResumeSpec extends SparkSpec {
   }
 
   test("ledger reader rejects extra fields, non-integer counts, non-string metrics and trailing content") {
-    val base = Files.createTempDirectory("graft_ledger_strict").toString
+    val base = tempDir("graft_ledger_strict").toString
     TableIO.writeEntry(base, TableIO.LedgerEntry("round_1", "round", -1, 5L, Map("singles" -> "2")))
     val f = TableIO.ledgerDir(base).resolve("round_1.json")
     val good = new String(Files.readAllBytes(f))
@@ -224,7 +224,7 @@ class ResumeSpec extends SparkSpec {
       (1L, "b-read", "orig1"), (1L, "a-read", "orig1"), (1L, "c-read", "orig2"),
       (2L, "z-read", "orig3")
     ).toDF("cluster_id", "member", "rep_candidate")
-    val out = Files.createTempDirectory("graft_evyat").resolve("out/evyat.txt").toString
+    val out = tempDir("graft_evyat").resolve("out/evyat.txt").toString
     TableIO.exportEvyat(spark, df, out)
     val txt = new String(Files.readAllBytes(Paths.get(out)))
     val expected =

@@ -1,6 +1,10 @@
 package graft
 
+import java.nio.file.{Files, Path}
+import java.util.Comparator
+
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one per JVM — spark_guide.md). */
@@ -19,8 +23,25 @@ object TestSession {
   }
 }
 
-abstract class SparkSpec extends AnyFunSuite {
+abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = TestSession.spark
+
+  private val tempDirs = scala.collection.mutable.ArrayBuffer.empty[Path]
+
+  /** A fresh directory under `java.io.tmpdir`, deleted with everything in
+    * it when the suite ends. */
+  protected def tempDir(prefix: String): Path = synchronized {
+    val d = Files.createTempDirectory(prefix)
+    tempDirs += d
+    d
+  }
+
+  override protected def afterAll(): Unit =
+    try tempDirs.foreach { d =>
+      val paths = Files.walk(d)
+      try paths.sorted(Comparator.reverseOrder[Path]()).forEach(p => Files.deleteIfExists(p))
+      finally paths.close()
+    } finally super.afterAll()
 
   /** Run `f` with the session confs `kvs` set, then restore their values. */
   protected def withConf[A](kvs: (String, String)*)(f: => A): A = {

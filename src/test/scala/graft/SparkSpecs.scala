@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.graft.StageProfiler
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 
@@ -31,6 +32,41 @@ object UnionFindOracle {
       }
     }
     nodes.map(n => n -> find(n)).toMap
+  }
+}
+
+/** The shard-minimum formulations of the salted chains that one read per
+  * chain replaced, kept as differential oracles: an intra-shard `lag`, plus
+  * a min(row_id) aggregate per shard whose minima a second `lag` chains in
+  * salt order. */
+object ChainOracles {
+  private def predecessors(salted: DataFrame, keys: Seq[String]): (DataFrame, DataFrame) = {
+    val wShard = Window.partitionBy((keys :+ "salt").map(col): _*).orderBy("row_id")
+    val intra = salted
+      .withColumn("x", lag("row_id", 1).over(wShard))
+      .where(col("x").isNotNull)
+      .select(col("x"), col("row_id").as("y"))
+    val shardMins = salted.groupBy((keys :+ "salt").map(col): _*).agg(min("row_id").as("mn"))
+    val inter = shardMins
+      .withColumn("x", lag("mn", 1).over(Window.partitionBy(keys.map(col): _*).orderBy("salt", "mn")))
+      .where(col("x").isNotNull)
+      .select(col("x"), col("mn").as("y"))
+    (intra.unionAll(inter)
+      .select(least(col("x"), col("y")).as("a"), greatest(col("x"), col("y")).as("b")), shardMins)
+  }
+
+  def chainPairs(buckets: DataFrame, saltShards: Int): DataFrame =
+    predecessors(buckets.withColumn(
+      "salt", pmod(xxhash64(col("row_id"), col("band_hash")), lit(saltShards))), Seq("band_hash"))
+      ._1.where(col("a") =!= col("b")).distinct()
+
+  /** (identity edges, rep ids) of the exact-duplicate collapse. */
+  def collapse(features: DataFrame, captions: DataFrame, saltShards: Int): (DataFrame, DataFrame) = {
+    val salted = features.select(col("row_id"), col("phash"))
+      .join(captions, "row_id")
+      .withColumn("salt", pmod(xxhash64(col("row_id")), lit(saltShards)))
+    val (identity, shardMins) = predecessors(salted, Seq("caption", "phash"))
+    (identity, shardMins.groupBy("caption", "phash").agg(min("mn").as("row_id")).select("row_id"))
   }
 }
 
@@ -330,6 +366,26 @@ class BandingSpec extends SparkSpec {
     assert(pairs.forall { case (a, b) => a / 100 == b / 100 })
   }
 
+  test("chainPairs equals the shard-minimum oracle on random buckets with duplicate rows") {
+    val rnd = new scala.util.Random(23)
+    // row ids from a shared pool, so rows sit in several buckets and large
+    // buckets draw the same (row_id, band_hash) more than once; a tenth of
+    // every bucket is also repeated outright
+    val pool = Array.fill(3000)(rnd.nextLong())
+    val rows = Seq(1, 2, 3, 5, 17, 40, 200, 1000).flatMap { b =>
+      val h = rnd.nextLong()
+      val ids = Seq.fill(b)(pool(rnd.nextInt(pool.length)))
+      (ids ++ ids.take(b / 10)).map(id => (id, h))
+    }
+    val buckets = rnd.shuffle(rows).toDF("row_id", "band_hash")
+    for (shards <- Seq(1, 16)) {
+      val got = Banding.chainPairs(buckets, shards).as[(Long, Long)].collect().toSeq
+      val want = ChainOracles.chainPairs(buckets, shards).as[(Long, Long)].collect().toSeq
+      assert(got.size == got.distinct.size)
+      assert(got.sorted == want.sorted, s"saltShards $shards")
+    }
+  }
+
   test("band lanes are deterministic and differ across rounds") {
     val cfg = GraftConfig()
     val l1 = Banding.lanes(cfg, 0)
@@ -466,6 +522,36 @@ class PipelineSpec extends SparkSpec {
     assert(p1 == p3, "clustering changed under round-0 batching")
     assert(s1 == s3, "A6 scores changed under round-0 batching")
     gen.unpersist()
+  }
+
+  test("exact-duplicate collapse equals the shard-minimum oracle: identity edges, reps and nDup") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(31)
+    // classes of 1..100 rows; every odd class shares its caption with the
+    // class before it under a different phash, so both keys matter
+    val rows = (1 to 100).flatMap { c =>
+      val caption = s"caption ${c - c % 2}"
+      Seq.fill(c)((rnd.nextLong(), caption, c.toLong))
+    }
+    val features = rows.map { case (id, _, ph) => (id, ph) }.toDF("row_id", "phash")
+    val captions = rows.map { case (id, cap, _) => (id, cap) }.toDF("row_id", "caption")
+    val shards = 16
+    val (identity, repIds, nDup) = Pipeline.collapseExactDups(features, captions, shards)
+    val (wantIdentity, wantReps) = ChainOracles.collapse(features, captions, shards)
+    try {
+      val reps = repIds.as[Long].collect().toSet
+      assert(identity.as[(Long, Long)].collect().toSeq.sorted ==
+        wantIdentity.as[(Long, Long)].collect().toSeq.sorted)
+      assert(reps == wantReps.as[Long].collect().toSet)
+      assert(reps == rows.groupBy(r => (r._2, r._3)).values.map(_.map(_._1).min).toSet)
+      assert(nDup == rows.size - reps.size)
+      // the classes do spread over the shards: a 100-row class fills all 16
+      assert(features.where(col("phash") === 100L)
+        .select(pmod(xxhash64(col("row_id")), lit(shards))).distinct().count() == shards)
+    } finally {
+      graft.util.Checkpoints.unpersistCheckpoint(identity)
+      graft.util.Checkpoints.unpersistCheckpoint(repIds)
+    }
   }
 }
 
