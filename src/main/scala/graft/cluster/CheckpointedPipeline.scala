@@ -1,6 +1,6 @@
 package graft.cluster
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.feat.MinHash
@@ -14,7 +14,7 @@ import graft.model.GraftConfig
   *
   *   workDir/
   *     features/part_id=k/   one parquet per INPUT partition (stage 1)
-  *     state/round=r/assign, state/round=r/scores   (stages 2-4)
+  *     state/round=r/rel     (row_id, cluster_id, score) (stages 2-4)
   *     _ledger/features_k.json, _ledger/round_r.json
   *
   * A kill at any point resumes by replaying the ledger: completed feature
@@ -100,14 +100,13 @@ object CheckpointedPipeline {
       features.select("row_id", "caption"))
 
     // ---- Stage 2-4: clustering rounds (round = resumable unit). ----
-    // The pass state is ONE relation (row_id, cluster_id, score); the small
-    // sizes side-relation is recomputed on load (one job over the loaded
-    // parquet). Ledger key = the pass's LAST macro round — pass boundaries
+    // The pass state is ONE relation (row_id, cluster_id, score), saved and
+    // loaded as is. Ledger key = the pass's LAST macro round — pass boundaries
     // are deterministic functions of (config, corpus), so a resumed run
     // re-derives the same chunking and replays at most one torn pass.
-    def saveState(st: Pipeline.State, stat: Pipeline.PhaseStat, bad: Int): Unit = {
+    def saveState(rel: DataFrame, stat: Pipeline.PhaseStat, bad: Int): Unit = {
       val r = stat.macroRound
-      st.rel.write.mode("overwrite").parquet(s"$workDir/state/round=$r/rel")
+      rel.write.mode("overwrite").parquet(s"$workDir/state/round=$r/rel")
       TableIO.writeEntry(workDir, TableIO.LedgerEntry(
         s"round_$r", "round", -1, stat.clusters,
         Map("singles" -> stat.singles.toString,
@@ -115,14 +114,10 @@ object CheckpointedPipeline {
             "workRate" -> stat.workRate.toString,
             "badRounds" -> bad.toString)))
     }
-    def loadState(r: Int): Pipeline.State = {
-      val rel = spark.read.parquet(s"$workDir/state/round=$r/rel")
+    def loadState(r: Int): DataFrame =
+      spark.read.parquet(s"$workDir/state/round=$r/rel")
         .repartition(col("row_id")) // restore the join-aligned partitioning
         .localCheckpoint()          // eager: truncate before any retirement
-      val sizes = rel.groupBy("cluster_id").agg(count(lit(1)).as("sz"))
-        .localCheckpoint()
-      Pipeline.State(rel, sizes)
-    }
     def loadStat(r: Int): (Pipeline.PhaseStat, Int) = {
       // clusters + singles + workRate + bad-round count (loop control) via
       // the structured ledger reader — a missing/malformed field aborts the
@@ -131,7 +126,7 @@ object CheckpointedPipeline {
       def metric(k: String): String = e.metrics.getOrElse(k,
         throw new IllegalStateException(
           s"ledger round_$r is missing required metric \"$k\" — format drift; refusing to resume"))
-      (Pipeline.PhaseStat("saved", r, -1L, -1L, e.rows, metric("singles").toLong,
+      (Pipeline.PhaseStat("saved", r, -1L, e.rows, metric("singles").toLong,
         metric("workRate").toDouble), metric("badRounds").toInt)
     }
 

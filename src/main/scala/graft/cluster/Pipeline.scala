@@ -26,23 +26,22 @@ import graft.model.GraftConfig
   * where the reference genuinely feeds back state (focus-set refresh).
   *
   * Round-3 latency-floor fixes (VERDICT r2 #1/#3): pipeline state is ONE
-  * relation `(row_id, cluster_id, score)` with a small cross-round
-  * `(cluster_id, sz)` side relation (one checkpoint + one fewer join per
-  * pass); the zero-work branch derives from the label-graph CC's probe
-  * (no separate verify-count job); and when the focus set is small,
-  * CONSECUTIVE MACRO ROUNDS ARE FUSED into a single pass — round j of a
-  * fused pass samples (singles ∪ rank-of-j reps) × round-j's L lane
-  * subsets, so the pass emits exactly the union of the sequential rounds'
-  * candidate draws from ONE explode (each focus row over the bands its
-  * rank draws in the pass, [[Banding.explodePassBands]]) feeding one
-  * chain/verify/CC, instead of T sequential passes.
+  * relation `(row_id, cluster_id, score)`, the reference's cluster map
+  * (`C_til`, `:134`) as rows — cluster sizes and singles are read off it
+  * where needed, never kept beside it; the zero-work branch derives from
+  * the label-graph CC's probe (no separate verify-count job); and when the
+  * focus set is small, CONSECUTIVE MACRO ROUNDS ARE FUSED into a single
+  * pass — round j of a fused pass samples (singles ∪ rank-of-j reps) ×
+  * round-j's L lane subsets, so the pass emits exactly the union of the
+  * sequential rounds' candidate draws from ONE explode (each focus row
+  * over the bands its rank draws in the pass, [[Banding.explodePassBands]])
+  * feeding one chain/verify/CC, instead of T sequential passes.
   */
 object Pipeline {
 
   final case class PhaseStat(
       phase: String,
       macroRound: Int,
-      candidatePairs: Long,
       verifiedPairs: Long,
       clusters: Long,
       singles: Long,
@@ -56,26 +55,33 @@ object Pipeline {
       captions: DataFrame, // cold cache: (row_id, caption), DISK_ONLY
       stats: Seq[PhaseStat])
 
-  /** Mutable-between-passes pipeline state:
-    *   rel   — (row_id, cluster_id, score), localCheckpoint'ed, hash-
-    *           partitioned on row_id (propagated from the features cache)
-    *           so per-pass joins on row_id shuffle only the small pair side;
-    *   sizes — (cluster_id, sz), eager-checkpointed; computed ONCE per pass
-    *           and reused for BOTH the pass stats and the next pass's focus
-    *           (round 2 recomputed this aggregate twice per round). */
-  final case class State(rel: DataFrame, sizes: DataFrame)
-
   /** The run's two caches (see [[buildCaches]]), their row count, the
     * typical caption length, and the shuffles that back them — the keep
     * set of every shuffle retirement. */
   private[graft] final case class Caches(features: DataFrame, captions: DataFrame, n: Long,
                                          capLen: Int, keep: Set[Int])
 
-  /** (clusters, singles) off the small checkpointed sizes relation. */
-  private def sizeStats(sizes: DataFrame): (Long, Long) = {
-    val r = sizes
-      .agg(count(lit(1)), sum(when(col("sz") === 1, 1L).otherwise(0L))).head()
+  /** A2 — (clusters, singles) of the pass state `rel`, in one query: the
+    * cluster map is `rel.groupBy(cluster_id)` (SURVEY.md A2). */
+  private def clusterStats(rel: DataFrame): (Long, Long) = {
+    val r = rel.groupBy("cluster_id").count()
+      .agg(count(lit(1)), sum(when(col("count") === 1, 1L).otherwise(0L))).head()
     (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+  }
+
+  /** C5 — the focus set of a pass whose rounds sample rep ranks up to
+    * `maxRank + 1`: every single (rk 0) and each multi cluster's reps of
+    * rank ≤ maxRank + 1 (rk = rank), the reference's cycling r
+    * (`:623-628`); reps are score-ranked, ties by row_id. One window over
+    * the pass state gives each row its cluster size and rank: both
+    * functions share one spec, so the plan is one exchange on cluster_id,
+    * one sort and one Window operator. */
+  private[graft] def focus(rel: DataFrame, maxRank: Int): DataFrame = {
+    val wRank = Window.partitionBy("cluster_id").orderBy(col("score").desc, col("row_id"))
+    val whole = wRank.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    rel.select(col("row_id"), count(lit(1)).over(whole).as("sz"), row_number().over(wRank).as("rn"))
+      .where(col("sz") === 1 || col("rn") <= maxRank + 1)
+      .select(col("row_id"), when(col("sz") === 1, lit(0)).otherwise(col("rn")).as("rk"))
   }
 
   /** A6 — score accumulation: +1 per verified-pair endpoint (`:546-547`). */
@@ -348,7 +354,7 @@ object Pipeline {
 
   /** Phases 2+3: chunk rounds + global banding + first CC pass. */
   private def initialState(spark: SparkSession, c: Caches, cfg: GraftConfig,
-                           retire: () => Unit): (State, PhaseStat) = {
+                           retire: () => Unit): (DataFrame, PhaseStat) = {
     val (features, captions, n) = (c.features, c.captions, c.n)
     val rows = features.select("row_id")
 
@@ -441,47 +447,25 @@ object Pipeline {
       .join(endpointCounts(firstEdges), Seq("row_id"), "left")
       .na.fill(0L, Seq("score"))
       .localCheckpoint()
-    val sizes = rel.groupBy("cluster_id").agg(count(lit(1)).as("sz"))
-      .localCheckpoint()
-    val (clusters, singles) = sizeStats(sizes)
+    val (clusters, singles) = clusterStats(rel)
     graft.util.Checkpoints.unpersistCheckpoint(firstEdges)
     batchEdges.foreach(graft.util.Checkpoints.unpersistCheckpoint)
     graft.util.Checkpoints.unpersistCheckpoint(identityEdges)
     graft.util.Checkpoints.unpersistCheckpoint(repIds)
     graft.util.Checkpoints.unpersistCheckpoint(comps) // rel supersedes it
-    (State(rel, sizes),
-      PhaseStat("chunk+band", 0, -1L, nVerified, clusters, singles, 1.0))
+    (rel, PhaseStat("chunk+band", 0, nVerified, clusters, singles, 1.0))
   }
 
   /** Phase 4, one PASS = the fused consecutive macro rounds `rounds`:
     * focus set -> one explode over every round's bands -> chain ->
     * verify -> incremental CC. Returns the new state and the pass's stat
     * (attributed to `rounds.last`). */
-  private def macroStep(spark: SparkSession, c: Caches, st: State, cfg: GraftConfig,
+  private def macroStep(spark: SparkSession, c: Caches, rel: DataFrame, cfg: GraftConfig,
                         rounds: Seq[Int], prevClusters: Long, prevSingles: Long,
-                        retire: () => Unit): (State, PhaseStat) = {
+                        retire: () => Unit): (DataFrame, PhaseStat) = {
     val (features, captions) = (c.features, c.captions)
-    // Focus = all singles + score-ranked reps of every multi cluster, the
-    // reference's cycling r (`:623-628`): round j samples rank (j-1) %
-    // reps_per_cluster. ONE wide exchange: state joins the checkpointed
-    // sizes on cluster_id and the rank window reuses that partitioning.
+    // round j samples rank (j-1) % reps_per_cluster + 1
     val maxRank = rounds.map(j => (j - 1) % cfg.repsPerCluster).max
-    // sizes has exactly `prevClusters` rows — hint the broadcast ourselves
-    // (static stats of a checkpointed relation are unknown, so without the
-    // hint a non-AQE plan would sort-merge and shuffle ALL of rel here)
-    val sizesJ =
-      if (prevClusters > 0 && prevClusters <= RepBroadcastMaxRows) broadcast(st.sizes)
-      else st.sizes
-    val relSz = st.rel.join(sizesJ, "cluster_id")
-    val singlesDf = relSz.where(col("sz") === 1)
-      .select(col("row_id"), lit(0).as("rk"))
-    val wRank = Window.partitionBy("cluster_id")
-      .orderBy(col("score").desc, col("row_id"))
-    val reps = relSz.where(col("sz") > 1)
-      .withColumn("rk", row_number().over(wRank))
-      .where(col("rk") <= maxRank + 1)
-      .select(col("row_id"), col("rk"))
-    val focus = singlesDf.unionAll(reps)
 
     // Fused candidate generation: ONE explode of the focus rows, each over
     // the (seed, lanes) bands its rank draws in this pass — singles every
@@ -500,7 +484,8 @@ object Pipeline {
     // scale, not an invariant (ADVICE r3; watch recall if fusedBandRowCap
     // ever allows very wide passes on skewed corpora).
     val cand = Banding.chainPairs(
-      Banding.explodePassBands(features.join(focus, "row_id"), cfg, rounds), cfg.saltShards)
+      Banding.explodePassBands(features.join(focus(rel, maxRank), "row_id"), cfg, rounds),
+      cfg.saltShards)
     // EAGER localCheckpoint, not persist (ADVICE r4): `verified` stays live
     // across this pass's early retirement below, and a persisted-only cache
     // would keep shuffle-backed lineage it could no longer recompute
@@ -516,7 +501,7 @@ object Pipeline {
     // Incremental CC on the LABEL graph: new pairs touch existing clusters,
     // so mapping endpoints to their current labels gives a graph with
     // ≤ |verified| edges — orders of magnitude smaller than re-running CC
-    // over all assignment edges. st.rel is hash-partitioned on row_id, so
+    // over all assignment edges. rel is hash-partitioned on row_id, so
     // only the small verified side shuffles here. The edges are built
     // (a < b)-normalized and distinct, so CC's probe scans them directly
     // (it replaced round 2's separate verify-count job, VERDICT r2 #1);
@@ -525,32 +510,35 @@ object Pipeline {
     // CC's retire after its probe is this pass's early retirement: with
     // `verified` checkpointed (lineage truncated), the pass's candidate-
     // generation shuffles (explode exchange, chain windows, pair distinct,
-    // focus joins) are provably dead — everything below reads only the
-    // verified checkpoint, the features cache and the checkpointed state —
-    // so the state-update jobs and the next pass never sit on top of this
-    // pass's widest intermediate.
-    val la = st.rel.select(col("row_id").as("a"), col("cluster_id").as("la"))
-    val lb = st.rel.select(col("row_id").as("b"), col("cluster_id").as("lb"))
-    val labelEdges = verified.join(la, "a").join(lb, "b")
-      .where(col("la") =!= col("lb"))
-      .select(least(col("la"), col("lb")).as("a"), greatest(col("la"), col("lb")).as("b"))
-      .distinct()
-    val comps = ConnectedComponents.components(spark, labelEdges, retire = retire,
-      inputNormalized = true)
+    // focus window and join) are provably dead — everything below reads
+    // only the verified checkpoint, the features cache and the checkpointed
+    // state — so the state-update jobs and the next pass never sit on top
+    // of this pass's widest intermediate. A pass that verified no pair has
+    // no label graph: it plans no CC at all (an empty plan's probe under
+    // AQE could leave an abandoned shuffle stage running into the retire).
+    val comps = if (nVerified == 0) None else {
+      val la = rel.select(col("row_id").as("a"), col("cluster_id").as("la"))
+      val lb = rel.select(col("row_id").as("b"), col("cluster_id").as("lb"))
+      val labelEdges = verified.join(la, "a").join(lb, "b")
+        .where(col("la") =!= col("lb"))
+        .select(least(col("la"), col("lb")).as("a"), greatest(col("la"), col("lb")).as("b"))
+        .distinct()
+      Some(ConnectedComponents.components(spark, labelEdges, retire = retire,
+        inputNormalized = true))
+    }
 
-    if (ConnectedComponents.isEmpty(comps)) {
+    if (comps.forall(ConnectedComponents.isEmpty)) {
       // no cluster merges this pass — skip the state-update jobs entirely.
       // (Documented divergence: intra-cluster score bumps from already-
       // co-clustered verified pairs are dropped in this branch; they only
       // shuffle rep ranking, and rank cycling explores reps regardless.)
       graft.util.Checkpoints.unpersistCheckpoint(verified)
-      graft.util.Checkpoints.unpersistCheckpoint(comps)
-      (st, PhaseStat("final", rounds.last, -1L, nVerified, prevClusters,
-        prevSingles, 0.0))
+      comps.foreach(graft.util.Checkpoints.unpersistCheckpoint)
+      (rel, PhaseStat("final", rounds.last, nVerified, prevClusters, prevSingles, 0.0))
     } else {
       // the driver path's remap is a LocalRelation the planner knows is
       // small (it broadcasts it unhinted); a star-loop remap is unbounded
-      val remap = comps.where(col("row_id") =!= col("cluster_id"))
+      val remap = comps.get.where(col("row_id") =!= col("cluster_id"))
         .select(col("row_id").as("cluster_id"), col("cluster_id").as("new_cluster_id"))
       // the score delta is hinted only when its size is bounded; an
       // unbounded hint bypasses Spark's broadcast safety (ADVICE)
@@ -559,35 +547,24 @@ object Pipeline {
 
       // EAGER: materialize the new state while `verified` is still cached
       // and BEFORE the superseded checkpoints are dropped below.
-      val rel = st.rel
+      val next = rel
         .join(remap, Seq("cluster_id"), "left")
         .join(deltasJ, Seq("row_id"), "left")
         .select(col("row_id"),
           coalesce(col("new_cluster_id"), col("cluster_id")).as("cluster_id"),
           (col("score") + coalesce(col("delta"), lit(0L))).as("score"))
         .localCheckpoint()
-      // Incremental sizes (round 4, VERDICT r3 #2): a pass only RELABELS
-      // clusters (row count is conserved), so the new sizes relation is the
-      // old one aggregated through the remap — O(clusters) rows instead of
-      // the full n-row groupBy-shuffle the round-3 pass paid here.
-      val sizes = st.sizes
-        .join(remap, Seq("cluster_id"), "left")
-        .groupBy(coalesce(col("new_cluster_id"), col("cluster_id")).as("cluster_id"))
-        .agg(sum("sz").as("sz"))
-        .localCheckpoint()
-      val (clusters, singles) = sizeStats(sizes)
+      val (clusters, singles) = clusterStats(next)
       graft.util.Checkpoints.unpersistCheckpoint(verified)
       // new state is materialized — free the superseded pass's checkpoint
       // blocks NOW (driver GC would retain them for the whole run: the
       // round-1 scale-killer that exhausted scratch disk at 8M+ rows)
       graft.util.Checkpoints.unpersistCheckpoint(remap)
-      graft.util.Checkpoints.unpersistCheckpoint(st.rel)
-      graft.util.Checkpoints.unpersistCheckpoint(st.sizes)
+      graft.util.Checkpoints.unpersistCheckpoint(rel)
       val workRate =
         if (prevSingles == 0) 0.0
         else (prevSingles - singles).toDouble / prevSingles
-      (State(rel, sizes),
-        PhaseStat("final", rounds.last, -1L, nVerified, clusters, singles, workRate))
+      (next, PhaseStat("final", rounds.last, nVerified, clusters, singles, workRate))
     }
   }
 
@@ -615,54 +592,54 @@ object Pipeline {
     * width scale with n). Every pass is handed to `save` with the bad-round
     * count it left, then the pass's shuffles are retired.
     *
-    * `resume` = (state, stat, bad-round count) as saved after pass
+    * `resume` = (rel, stat, bad-round count) as saved after pass
     * `stat.macroRound`: the loop skips round 0 and continues at the next
     * macro round, exactly as an uninterrupted run would (pass boundaries
     * are deterministic functions of config and corpus). The returned stats
     * cover only the passes this call ran. */
   private[cluster] def loop(spark: SparkSession, c: Caches, cfg: GraftConfig,
-      resume: Option[(State, PhaseStat, Int)] = None,
-      save: (State, PhaseStat, Int) => Unit = (_, _, _) => ()): Result = {
+      resume: Option[(DataFrame, PhaseStat, Int)] = None,
+      save: (DataFrame, PhaseStat, Int) => Unit = (_, _, _) => ()): Result = {
     def retire(): Unit = {
       org.apache.spark.graft.ShuffleRetirement
         .retireAllExcept(spark.sparkContext, c.keep); ()
     }
     val stats = scala.collection.mutable.ArrayBuffer.empty[PhaseStat]
-    def timed(step: => (State, PhaseStat)): (State, PhaseStat) = {
+    def timed(step: => (DataFrame, PhaseStat)): (DataFrame, PhaseStat) = {
       val t = System.nanoTime()
-      val (st, stat) = step
-      (st, stat.copy(seconds = (System.nanoTime() - t) / 1e9))
+      val (rel, stat) = step
+      (rel, stat.copy(seconds = (System.nanoTime() - t) / 1e9))
     }
-    def commit(st: State, stat: PhaseStat, bad: Int): Unit = {
+    def commit(rel: DataFrame, stat: PhaseStat, bad: Int): Unit = {
       stats += stat
-      save(st, stat, bad)
+      save(rel, stat, bad)
       retire()
     }
 
-    var (st, last, bad) = resume.getOrElse {
-      val (st0, stat0) = timed(initialState(spark, c, cfg, retire))
-      commit(st0, stat0, 0)
-      (st0, stat0, 0)
+    var (rel, last, bad) = resume.getOrElse {
+      val (rel0, stat0) = timed(initialState(spark, c, cfg, retire))
+      commit(rel0, stat0, 0)
+      (rel0, stat0, 0)
     }
     val ctl = RoundControl(cfg, c.n)
     var done = last.macroRound > 0 && ctl.stopped(bad, last.macroRound, last.workRate)
     while (!done && last.singles > 0 && last.macroRound < ctl.maxMacro) {
       val from = last.macroRound + 1
       val rounds = from until (from + ctl.passSize(from, bad, last.clusters))
-      val (st2, stat) = timed(
-        macroStep(spark, c, st, cfg, rounds, last.clusters, last.singles, retire))
+      val (rel2, stat) = timed(
+        macroStep(spark, c, rel, cfg, rounds, last.clusters, last.singles, retire))
       val (nbad, stop) = ctl.stepPass(bad, rounds, last.singles, stat)
-      commit(st2, stat, nbad)
-      st = st2; last = stat; bad = nbad; done = stop
+      commit(rel2, stat, nbad)
+      rel = rel2; last = stat; bad = nbad; done = stop
     }
 
     Result(
-      st.rel.select("row_id", "cluster_id"),
+      rel.select("row_id", "cluster_id"),
       // A6 divergence (documented at the zero-work branch in macroStep): a
       // row whose only verified pairs occur in merge-free passes keeps
       // score 0 and is absent here — downstream consumers get a slightly
       // sparser scores relation than a sequential per-round run would emit.
-      st.rel.where(col("score") > 0).select("row_id", "score"),
+      rel.where(col("score") > 0).select("row_id", "score"),
       c.features, c.captions, stats.toSeq)
   }
 }

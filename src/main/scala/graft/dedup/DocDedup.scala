@@ -41,7 +41,8 @@ object DocDedup {
       }).toDF("row_id", "shingles", "minhash")
       .persist()
 
-    val cand = Banding.candidatePairs(feats, cfg, macroRound = 0)
+    val cand = Banding.chainPairs(feats.select(col("row_id"),
+      explode(array(Banding.bandHashCols(col("minhash"), cfg, 0): _*)).as("band_hash")), cfg.saltShards)
     val fa = feats.select(col("row_id").as("a"), col("shingles").as("sh_a"))
     val fb = feats.select(col("row_id").as("b"), col("shingles").as("sh_b"))
     val inter = size(array_intersect(col("sh_a"), col("sh_b"))).cast("double")

@@ -63,17 +63,6 @@ object Banding {
       xxhash64((lit(seed) +: ls.map(i => minhashCol.getItem(i))): _*)
     }
 
-  /** Column of L globally-keyed band hashes for a `minhash` array column. */
-  def bandHashArray(minhashCol: Column, cfg: GraftConfig, macroRound: Int): Column =
-    array(bandHashCols(minhashCol, cfg, macroRound): _*)
-
-  /** Exploded (row_id, band_hash) relation for the fused L rounds of one
-    * macro iteration. `df` must have `row_id` and `minhash` columns. */
-  def explodeBands(df: DataFrame, cfg: GraftConfig, macroRound: Int): DataFrame =
-    df.select(
-      col("row_id"),
-      explode(bandHashArray(col("minhash"), cfg, macroRound)).as("band_hash"))
-
   /** One band of a pass's lookup table: its seed and its k lanes. */
   final case class Band(seed: Long, lanes: Seq[Int])
 
@@ -148,9 +137,4 @@ object Banding {
       .select(least(col("x"), col("row_id")).as("a"), greatest(col("x"), col("row_id")).as("b"))
       .where(col("a") =!= col("b"))
       .distinct()
-
-  /** Full fused banding pass: features (row_id, minhash) → candidate pairs
-    * (a, b), a < b, distinct across all L rounds. */
-  def candidatePairs(features: DataFrame, cfg: GraftConfig, macroRound: Int): DataFrame =
-    chainPairs(explodeBands(features, cfg, macroRound), cfg.saltShards)
 }

@@ -3,7 +3,7 @@ package graft
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.graft.StageProfiler
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{JobSucceeded, SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 
 import graft.cluster.{CheckpointedPipeline, Pipeline}
 import graft.gen.SyntheticCorpus
@@ -112,6 +112,34 @@ class DriverLoopSpec extends SparkSpec {
     } finally {
       sc.removeSparkListener(listener)
       sc.removeSparkListener(prof)
+    }
+  }
+
+  test("a run whose macro passes verify no pair runs no failed job") {
+    // the demo corpus: round 0 resolves every group, so each macro pass
+    // verifies nothing; such a pass plans no label graph and no CC, whose
+    // probe over an empty plan under AQE left an abandoned shuffle stage
+    // running into the pass's retire, which failed that stage's job
+    val failed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobResult != JobSucceeded) failed.add(s"job ${e.jobId}: ${e.jobResult}")
+    }
+    val sc = spark.sparkContext
+    val prof = StageProfiler.attach(sc)
+    sc.addSparkListener(listener)
+    val gen = SyntheticCorpus.generate(spark,
+      SyntheticCorpus.GenConfig(groups = 300, seed = 42L)).cache()
+    try {
+      val res = Pipeline.run(spark, SyntheticCorpus.imagesOf(gen), GraftConfig(seed = 7L))
+      assert(assignOf(res).values.toSet.size == 300)
+      assert(res.stats.exists(s => s.macroRound > 0 && s.verifiedPairs == 0), res.stats)
+      assert(prof.jobs > 0) // drains the bus: every job end is recorded
+      assert(failed.isEmpty, failed.asScala.mkString("\n"))
+    } finally {
+      sc.removeSparkListener(listener)
+      sc.removeSparkListener(prof)
+      gen.unpersist()
     }
   }
 }

@@ -9,6 +9,8 @@ import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec, SortExe
 import org.apache.spark.sql.execution.aggregate.HashAggregateExec
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.BaseJoinExec
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 
 import graft.cluster.Pipeline
@@ -80,10 +82,16 @@ class PlanShapeSpec extends SparkSpec {
     assert(aggs.isEmpty, s"an aggregate between the explode and the pair distinct:\n$p")
   }
 
+  /** Round-0 candidate pairs: the L band hashes exploded inline, as
+    * `Pipeline`'s round 0 and `DocDedup.minhashLsh` explode them. */
+  private def round0Candidates(features: DataFrame, cfg: GraftConfig): DataFrame =
+    Banding.chainPairs(features.select(col("row_id"),
+      explode(array(Banding.bandHashCols(col("minhash"), cfg, 0): _*)).as("band_hash")), cfg.saltShards)
+
   test("banding: the exploded L×n relation crosses exactly one exchange, the (band_hash, salt) window") {
     val cfg = GraftConfig()
     val features = MinHash.featurize(spark, images, cfg).toDF()
-    assertOneWideBandExchange(plan(Banding.candidatePairs(features, cfg, 0)))
+    assertOneWideBandExchange(plan(round0Candidates(features, cfg)))
   }
 
   test("macro pass: one explode, one wide exchange, and a plan that does not grow with the pass width") {
@@ -108,6 +116,16 @@ class PlanShapeSpec extends SparkSpec {
     case other => fail(s"exchange is not hash-partitioned: $other")
   }
 
+  test("focus: one window over the pass state, one cluster_id exchange, no join") {
+    val rel = spark.range(0, 200).select(col("id").as("row_id"),
+      (col("id") % 37).as("cluster_id"), (col("id") % 3).as("score"))
+      .repartition(col("row_id")).localCheckpoint() // the pass state's layout
+    val p = plan(Pipeline.focus(rel, maxRank = 2))
+    assert(p.collect { case w: WindowExec => w }.size == 1, p)
+    assert(p.collect { case e: ShuffleExchangeExec => hashKeys(e) } == Seq(Seq("cluster_id")), p)
+    assert(p.collect { case j: BaseJoinExec => j }.isEmpty, p)
+  }
+
   test("exact-dup collapse: one read of each cache, two window exchanges and sorts, no aggregate") {
     val cfg = GraftConfig()
     val c = Pipeline.caches(spark, images, cfg)
@@ -129,7 +147,7 @@ class PlanShapeSpec extends SparkSpec {
   /** Round-0 candidates (checkpointed, so a plan over them holds only the
     * verify exchanges) verified against the caches `c`. */
   private def verifyRound0(c: Pipeline.Caches, cfg: GraftConfig): DataFrame =
-    VerifyPairs.verify(Banding.candidatePairs(c.features, cfg, 0).localCheckpoint(),
+    VerifyPairs.verify(round0Candidates(c.features, cfg).localCheckpoint(),
       c.features, c.captions, cfg.q, cfg.sdHigh, cfg.sdLow, cfg.distanceThreshold,
       cfg.hammingThreshold, cfg.minLcs)
 

@@ -64,11 +64,11 @@ class RoundControlSpec extends SparkSpec {
     // stepPass: a T-round pass resolving <= T*work_in_bad counts as T bad
     // rounds; resolving more resets the counter (recall-safe patience)
     val (bad1, stop1) = ctl.stepPass(bad = 0, rounds = 1 to 10,
-      prevSingles = 75009L, stat = Pipeline.PhaseStat("final", 10, -1L, 0L,
+      prevSingles = 75009L, stat = Pipeline.PhaseStat("final", 10, 0L,
         1000L, 75009L - 10 * ctl.workInBadMacro, 0.0))
     assert(bad1 == 10 && stop1) // >= allowedBad(5) at/after minMacro(10)
     val (bad2, stop2) = ctl.stepPass(bad = 0, rounds = 1 to 10,
-      prevSingles = 75009L, stat = Pipeline.PhaseStat("final", 10, -1L, 0L,
+      prevSingles = 75009L, stat = Pipeline.PhaseStat("final", 10, 0L,
         1000L, 75009L - 10 * ctl.workInBadMacro - 1, 0.0))
     assert(bad2 == 0 && !stop2)
   }

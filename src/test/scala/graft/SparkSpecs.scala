@@ -70,6 +70,24 @@ object ChainOracles {
   }
 }
 
+/** The focus formulation the one-window `Pipeline.focus` replaced, kept as
+  * its differential oracle: cluster sizes aggregated beside the state and
+  * joined back, singles at rank 0, and a rank window over the rows of
+  * multi clusters only. */
+object FocusOracle {
+  def focus(rel: DataFrame, maxRank: Int): DataFrame = {
+    val sizes = rel.groupBy("cluster_id").agg(count(lit(1)).as("sz"))
+    val relSz = rel.join(broadcast(sizes), "cluster_id")
+    val singles = relSz.where(col("sz") === 1).select(col("row_id"), lit(0).as("rk"))
+    val wRank = Window.partitionBy("cluster_id").orderBy(col("score").desc, col("row_id"))
+    val reps = relSz.where(col("sz") > 1)
+      .withColumn("rk", row_number().over(wRank))
+      .where(col("rk") <= maxRank + 1)
+      .select(col("row_id"), col("rk"))
+    singles.unionAll(reps)
+  }
+}
+
 class ConnectedComponentsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -522,6 +540,27 @@ class PipelineSpec extends SparkSpec {
     assert(p1 == p3, "clustering changed under round-0 batching")
     assert(s1 == s3, "A6 scores changed under round-0 batching")
     gen.unpersist()
+  }
+
+  test("focus equals the sizes-join oracle on random states: cluster sizes 1-50, tied scores, maxRank 0-4") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(14)
+    for (state <- 1 to 3) {
+      // 80 clusters, a third of them singles; scores 0..2 tie often, so the
+      // row_id tie-break decides ranks
+      val sizes = Seq.fill(80)(if (rnd.nextInt(3) == 0) 1 else 1 + rnd.nextInt(50))
+      val ids = rnd.shuffle((0L until sizes.sum.toLong).toVector)
+      val rows = sizes.zipWithIndex.flatMap { case (sz, c) => Seq.fill(sz)((c.toLong, rnd.nextInt(3).toLong)) }
+        .zip(ids).map { case ((c, score), id) => (id, c * 1000 + state, score) }
+      val rel = rows.toDF("row_id", "cluster_id", "score").repartition(col("row_id")).localCheckpoint()
+      try for (maxRank <- 0 to 4) {
+        val got = Pipeline.focus(rel, maxRank).as[(Long, Int)].collect()
+        val want = FocusOracle.focus(rel, maxRank).as[(Long, Int)].collect()
+        assert(got.length == got.toSet.size, s"state $state, maxRank $maxRank: a row twice")
+        assert(got.toSet == want.toSet, s"state $state, maxRank $maxRank")
+        assert(got.exists(_._2 == 0) && got.exists(_._2 == maxRank + 1), s"state $state, maxRank $maxRank")
+      } finally graft.util.Checkpoints.unpersistCheckpoint(rel)
+    }
   }
 
   test("exact-duplicate collapse equals the shard-minimum oracle: identity edges, reps and nDup") {

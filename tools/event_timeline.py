@@ -8,7 +8,10 @@ and prints one line per job: its start offset from the application start,
 its duration, the gap since the previous job ended (negative when the two
 overlap), the task count of every stage it ran (skipped stages are left
 out) and its call site (for a job AQE submits for one query stage, the call
-site of the query's action). Each ``--jobs A-B`` range (inclusive job ids)
+site of the query's action). A job whose result is not ``JobSucceeded`` is
+marked ``FAILED:`` with the first 120 characters of its message, and every
+stage that reports a failure reason is listed under its job. Each
+``--jobs A-B`` range (inclusive job ids)
 adds a summary line: span (first start to last end), busy (time with at
 least one of those jobs running), idle (span minus busy), and the summed
 executor run time and CPU time of their tasks. Standard library only.
@@ -50,6 +53,8 @@ class Job:
         self.id, self.start, self.end = jid, start, None
         self.stage_ids, self.props, self.names = stage_ids, props, names
         self.stages = []  # (stage id, tasks) of the stages this job ran
+        self.failure = None  # the job's failure message, if it did not succeed
+        self.failed_stages = []  # (stage id, failure reason)
 
     def call_site(self, sql):
         """The job's own call site; a job that AQE submits for one query stage
@@ -81,6 +86,10 @@ def timeline(events):
             if job:
                 job.end = ev["Completion Time"]
                 running = [j for j in running if j is not job]
+                result = ev.get("Job Result") or {}
+                if result.get("Result") != "JobSucceeded":
+                    job.failure = (result.get("Exception") or {}).get(
+                        "Message", result.get("Result", "?"))
         elif kind == "SparkListenerStageSubmitted":
             sid = ev["Stage Info"]["Stage ID"]
             holders = [j for j in running if sid in j.stage_ids]
@@ -91,6 +100,8 @@ def timeline(events):
             job = owner.get(info["Stage ID"])
             if job:
                 job.stages.append((info["Stage ID"], info.get("Number of Tasks", 0)))
+                if info.get("Failure Reason"):
+                    job.failed_stages.append((info["Stage ID"], info["Failure Reason"]))
         elif kind == "SparkListenerTaskEnd":
             m = ev.get("Task Metrics") or {}
             w = work.setdefault(ev["Stage ID"], [0, 0])
@@ -99,6 +110,11 @@ def timeline(events):
     if app_start is None and jobs:
         app_start = min(j.start for j in jobs.values())
     return app_start, jobs, work, sql
+
+
+def brief(message):
+    """The first 120 characters of `message`, whitespace collapsed."""
+    return " ".join(message.split())[:120]
 
 
 def parse_range(text):
@@ -120,8 +136,11 @@ def main(argv=None):
         end = job.end if job.end is not None else job.start
         gap = (job.start - prev_end) / 1e3 if prev_end is not None else 0.0
         tasks = "+".join(str(n) for _, n in sorted(job.stages)) or "-"
+        failed = f"  FAILED: {brief(job.failure)}" if job.failure is not None else ""
         print(f"{job.id:>4} {(job.start - t0) / 1e3:>8.3f} {(end - job.start) / 1e3:>7.3f} "
-              f"{gap:>6.3f}  {tasks}  {job.call_site(sql)}")
+              f"{gap:>6.3f}  {tasks}  {job.call_site(sql)}{failed}")
+        for sid, reason in job.failed_stages:
+            print(f"{'':>4}   stage {sid} failed: {brief(reason)}")
         prev_end = end if prev_end is None else max(prev_end, end)
 
     for a, b in args.jobs:
