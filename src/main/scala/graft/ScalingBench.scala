@@ -120,7 +120,7 @@ object ScalingBench {
     }
     // disk-envelope knobs for the largest corpora: round-0 batch count and
     // the fused-pass volume cap bound the in-flight scratch of any single
-    // query (see Pipeline.initialState / GraftConfig)
+    // query (see GraftConfig.round0Batches / Pipeline.RoundControl.passSize)
     val cfgRun = GraftConfig(seed = 7L,
       round0Batches = sys.env.getOrElse("SPARK_GRAFT_R0_BATCHES", "1").toInt,
       fusedBandRowCap = sys.env.getOrElse("SPARK_GRAFT_FUSED_CAP",

@@ -69,8 +69,9 @@ object ConnectedComponents {
     * costs O(log n) Spark jobs of ~6 stages each, which dominates wall time
     * on fixture-scale graphs by 10×+ (guide §1.2: fix the distributed
     * algorithm first — here the fix is to not distribute a 3 MB problem).
-    * The same cap bounds round-0 CC and every macro pass's label-graph
-    * remap (Pipeline.macroStep). Override per session with
+    * The same cap bounds the CC of the pipeline's one state update
+    * (Pipeline.advance): round 0's edges and every macro pass's label
+    * graph. Override per session with
     * `spark.graft.cc.driverUnionFindMaxEdges` (0 disables the fast path);
     * beyond the cap the distributed loop runs exactly as before, so 100 TB
     * behavior is unchanged. */
@@ -244,6 +245,11 @@ object ConnectedComponents {
     var converged = false
     var iter = 0
     var curSig = signature(cur)
+    if (curSig._1 == 0) { // no edge, no component: a local result, as the driver path's
+      if (curOwned) graft.util.Checkpoints.unpersistCheckpoint(cur)
+      import spark.implicits._
+      return Seq.empty[(Long, Long)].toDF("row_id", "cluster_id")
+    }
     while (!converged && iter < maxIter) {
       // ONE star-pair per convergence check (see `retire` doc above): the
       // signature job materializes exactly one pair's star shuffles before
@@ -285,13 +291,13 @@ object ConnectedComponents {
     case _ => false
   }
 
-  /** Whether a [[components]] result is empty. A driver-path result is a
-    * LocalRelation, read here with no Spark job; a star-loop result is a
-    * checkpoint, checked by one block scan. */
+  /** Whether a [[components]] result is empty, read with no Spark job: an
+    * empty result is always a LocalRelation (the driver path's, or the star
+    * loop's on an edgeless graph), and a star-loop checkpoint never is. */
   private[cluster] def isEmpty(comps: DataFrame): Boolean =
     comps.queryExecution.analyzed.collectLeaves() match {
       case Seq(local: LocalRelation) => local.data.isEmpty
-      case _ => comps.isEmpty
+      case _ => false
     }
 
   /** Cheap convergence fingerprint: (count, xor of edge hashes) — xor is

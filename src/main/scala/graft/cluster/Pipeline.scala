@@ -28,14 +28,15 @@ import graft.model.GraftConfig
   * Round-3 latency-floor fixes (VERDICT r2 #1/#3): pipeline state is ONE
   * relation `(row_id, cluster_id, score)`, the reference's cluster map
   * (`C_til`, `:134`) as rows — cluster sizes and singles are read off it
-  * where needed, never kept beside it; the zero-work branch derives from
-  * the label-graph CC's probe (no separate verify-count job); and when the
-  * focus set is small, CONSECUTIVE MACRO ROUNDS ARE FUSED into a single
-  * pass — round j of a fused pass samples (singles ∪ rank-of-j reps) ×
-  * round-j's L lane subsets, so the pass emits exactly the union of the
-  * sequential rounds' candidate draws from ONE explode (each focus row
-  * over the bands its rank draws in the pass, [[Banding.explodePassBands]])
-  * feeding one chain/verify/CC, instead of T sequential passes.
+  * where needed, never kept beside it; round 0 and every macro pass update
+  * it through one step ([[advance]]), which keeps the state when CC merges
+  * nothing; and when the focus set is small, CONSECUTIVE MACRO ROUNDS ARE
+  * FUSED into a single pass — round j of a fused pass samples (singles ∪
+  * rank-of-j reps) × round-j's L lane subsets, so the pass emits exactly
+  * the union of the sequential rounds' candidate draws from ONE explode
+  * (each focus row over the bands its rank draws in the pass,
+  * [[Banding.explodePassBands]]) feeding one chain/verify/CC, instead of T
+  * sequential passes.
   */
 object Pipeline {
 
@@ -221,12 +222,18 @@ object Pipeline {
     * (ADVICE r2). */
   private[graft] val RepBroadcastMaxRows = 4000000L
 
-  /** The per-pass score-delta relation holds one row per DISTINCT verified-
-    * pair endpoint — at most 2·nVerified rows — so it may ride a broadcast
-    * hint only when that bound stays within [[RepBroadcastMaxRows]]
-    * (VERDICT r3 #3: the round-3 gate allowed up to 4× the documented cap). */
-  private[graft] def deltasBroadcastable(nVerified: Long): Boolean =
-    2L * nVerified <= RepBroadcastMaxRows
+  /** The score-delta relation holds one row per DISTINCT verified-pair
+    * endpoint — at most 2·nVerified rows — so it may ride a broadcast hint
+    * only when that bound stays within [[RepBroadcastMaxRows]] (VERDICT r3
+    * #3: the round-3 gate allowed up to 4× the documented cap) and within
+    * the `n` rows of the state it joins. The state is hash-partitioned on
+    * row_id, so without the hint only the deltas shuffle; a broadcast pays
+    * when it spares sorting a much larger state, and adds one stage for
+    * nothing once the deltas can be as large as the state (round 0 of a
+    * duplicate-heavy corpus: a 757,494-row bound against 83,025 rows at
+    * 8,000 groups). */
+  private[graft] def deltasBroadcastable(nVerified: Long, n: Long): Boolean =
+    2L * nVerified <= math.min(RepBroadcastMaxRows, n)
 
   /** Runs `f` with AQE off and 16 static shuffle partitions when `small`,
     * restoring both session confs afterwards. Its one caller is the frozen
@@ -352,11 +359,72 @@ object Pipeline {
     Caches(features, captions, n, if (n == 0) 0 else capRow.getInt(1), keep)
   }
 
-  /** Phases 2+3: chunk rounds + global banding + first CC pass. */
-  private def initialState(spark: SparkSession, c: Caches, cfg: GraftConfig,
+  /** The one state update of round 0 and every macro pass — the
+    * reference's per-round merge after its chunk rounds and after every
+    * final round (`:531-548`, `:633-647`). CC runs over `labels`, the label
+    * graph of the eagerly checkpointed `verified` edges (`nVerified` rows),
+    * and the new state is `rel ⋈ remap ⋈ deltas`: each row takes its
+    * cluster's new label and +1 score per verified endpoint (A6). Returns
+    * the state with its (clusters, singles).
+    *
+    * No verified edge runs no CC (under AQE, the probe of an empty plan
+    * could leave an abandoned shuffle stage running into the retire); when
+    * CC merges nothing the state is kept with `prev` and no further job
+    * runs — the one zero-work branch, for round 0 and every pass alike.
+    * (Documented divergence: a pass whose verified pairs all sit inside
+    * existing clusters drops their score bumps; they only shuffle rep
+    * ranking, and rank cycling explores reps regardless.) Frees `verified`
+    * and the remap.
+    *
+    * Ownership: the loop frees a superseded state only when the loop itself
+    * checkpointed it — a step's output, or the resumed state
+    * `CheckpointedPipeline` checkpoints for it — and never the identity
+    * state: [[graft.util.Checkpoints.unpersistCheckpoint]] frees every
+    * checkpoint leaf of the analyzed plan, and the identity state's plan
+    * reaches the caller's input, which [[buildCaches]] tells callers to
+    * localCheckpoint. */
+  private def advance(spark: SparkSession, c: Caches, rel: DataFrame, verified: DataFrame,
+                      nVerified: Long, labels: DataFrame, prev: (Long, Long),
+                      retire: () => Unit): (DataFrame, Long, Long) = {
+    // labels are built (a < b)-normalized and distinct, so CC skips its
+    // normalize+distinct prologue (round 8): at 32M rows round 0's prologue
+    // was a full exchange and checkpoint of ~108M edges at the scratch crest
+    val comps = if (nVerified == 0) None
+      else Some(ConnectedComponents.components(spark, labels, retire = retire,
+        inputNormalized = true))
+    val next = comps.filterNot(ConnectedComponents.isEmpty).map { cc =>
+      // the driver path's remap is a LocalRelation the planner knows is
+      // small (it broadcasts it unhinted); a star-loop remap is unbounded
+      val remap = cc.where(col("row_id") =!= col("cluster_id"))
+        .select(col("row_id").as("cluster_id"), col("cluster_id").as("new_cluster_id"))
+      // the score delta is hinted only when its size is bounded (an
+      // unbounded hint bypasses Spark's broadcast safety, ADVICE) and small
+      // beside the state
+      val deltas = endpointCounts(verified).withColumnRenamed("score", "delta")
+      val deltasJ = if (deltasBroadcastable(nVerified, c.n)) broadcast(deltas) else deltas
+      // EAGER (round 4): materialize the new state while `verified` is
+      // still cached; truncating its lineage here is what makes pass-
+      // boundary shuffle retirement safe
+      val state = rel
+        .join(remap, Seq("cluster_id"), "left")
+        .join(deltasJ, Seq("row_id"), "left")
+        .select(col("row_id"),
+          coalesce(col("new_cluster_id"), col("cluster_id")).as("cluster_id"),
+          (col("score") + coalesce(col("delta"), lit(0L))).as("score"))
+        .localCheckpoint()
+      val (clusters, singles) = clusterStats(state)
+      (state, clusters, singles)
+    }
+    graft.util.Checkpoints.unpersistCheckpoint(verified)
+    comps.foreach(graft.util.Checkpoints.unpersistCheckpoint) // the remap's one leaf
+    next.getOrElse((rel, prev._1, prev._2))
+  }
+
+  /** Phases 2+3: chunk rounds + global banding, then [[advance]] from the
+    * identity state `rel0`. */
+  private def initialState(spark: SparkSession, c: Caches, cfg: GraftConfig, rel0: DataFrame,
                            retire: () => Unit): (DataFrame, PhaseStat) = {
     val (features, captions, n) = (c.features, c.captions, c.n)
-    val rows = features.select("row_id")
 
     val (identityEdges, repIds, nDup) = collapseExactDups(features, captions, cfg.saltShards)
     // dup-free corpora skip the rep join entirely; otherwise the rep-id set
@@ -420,46 +488,28 @@ object Pipeline {
     // side restores EXACT single-query semantics, scores included.
     val chainEdges0 = batchEdges.reduce(_ unionAll _)
     val chainEdges = if (nBatches > 1) chainEdges0.distinct() else chainEdges0
-    // EAGER checkpoint, not persist: connected components below retires
-    // shuffles PER ITERATION (round 5 — the un-retired CC window was the
-    // 54.7 GB peak-scratch driver at 32M), and the cross-batch distinct
-    // would otherwise be live shuffle lineage under a persisted-only cache
-    val firstEdges = chainEdges.unionAll(identityEdges)
-      .localCheckpoint()
-    // CC's own first job materializes firstEdges into the cache (round 2 ran
-    // a separate count() job through the whole verify pipeline first); the
-    // stats count below is then a cheap cache scan.
-    // inputNormalized (round 8): firstEdges is (a<b)-normalized, distinct
-    // (chainPairs' distinct / the cross-batch distinct; identity edges are
-    // disjoint and normalized at construction) and eagerly checkpointed —
-    // CC's normalize+distinct prologue would re-exchange the full verified
-    // edge set (~108M rows at 32M inputs) and re-checkpoint it AT THE
-    // ROUND-0 SCRATCH CREST for nothing. Skipping it removes one full-width
-    // exchange + one checkpoint from the widest moment of the run.
-    val comps = ConnectedComponents.components(spark, firstEdges, retire = retire,
-      inputNormalized = true)
-    val nVerified = firstEdges.count()
-    val assign = ConnectedComponents.assign(rows, comps)
-    // EAGER (round 4): truncating rel's lineage HERE is what makes pass-
-    // boundary shuffle retirement provably safe — after this checkpoint no
-    // future action can reference round-0's shuffles.
-    val rel = assign
-      .join(endpointCounts(firstEdges), Seq("row_id"), "left")
-      .na.fill(0L, Seq("score"))
-      .localCheckpoint()
-    val (clusters, singles) = clusterStats(rel)
-    graft.util.Checkpoints.unpersistCheckpoint(firstEdges)
+    // EAGER checkpoint, not persist: connected components retires shuffles
+    // PER ITERATION (round 5 — the un-retired CC window was the 54.7 GB
+    // peak-scratch driver at 32M), and the cross-batch distinct would
+    // otherwise be live shuffle lineage under a persisted-only cache.
+    // firstEdges is (a<b)-normalized and distinct (chainPairs' distinct /
+    // the cross-batch distinct; identity edges are disjoint and normalized
+    // at construction), and round-0 labels are row ids, so it is its own
+    // label graph.
+    val firstEdges = chainEdges.unionAll(identityEdges).localCheckpoint()
+    val nVerified = firstEdges.count() // a scan of the checkpoint blocks
+    val (rel, clusters, singles) =
+      advance(spark, c, rel0, firstEdges, nVerified, firstEdges, (n, n), retire)
     batchEdges.foreach(graft.util.Checkpoints.unpersistCheckpoint)
     graft.util.Checkpoints.unpersistCheckpoint(identityEdges)
     graft.util.Checkpoints.unpersistCheckpoint(repIds)
-    graft.util.Checkpoints.unpersistCheckpoint(comps) // rel supersedes it
     (rel, PhaseStat("chunk+band", 0, nVerified, clusters, singles, 1.0))
   }
 
   /** Phase 4, one PASS = the fused consecutive macro rounds `rounds`:
     * focus set -> one explode over every round's bands -> chain ->
-    * verify -> incremental CC. Returns the new state and the pass's stat
-    * (attributed to `rounds.last`). */
+    * verify -> [[advance]] over the label graph. Returns the new state and
+    * the pass's stat (attributed to `rounds.last`). */
   private def macroStep(spark: SparkSession, c: Caches, rel: DataFrame, cfg: GraftConfig,
                         rounds: Seq[Int], prevClusters: Long, prevSingles: Long,
                         retire: () => Unit): (DataFrame, PhaseStat) = {
@@ -502,70 +552,26 @@ object Pipeline {
     // so mapping endpoints to their current labels gives a graph with
     // ≤ |verified| edges — orders of magnitude smaller than re-running CC
     // over all assignment edges. rel is hash-partitioned on row_id, so
-    // only the small verified side shuffles here. The edges are built
-    // (a < b)-normalized and distinct, so CC's probe scans them directly
-    // (it replaced round 2's separate verify-count job, VERDICT r2 #1);
-    // small label graphs then union-find on the driver (the reference's
-    // own merge structure, :399-418) and large ones run the star loop.
-    // CC's retire after its probe is this pass's early retirement: with
-    // `verified` checkpointed (lineage truncated), the pass's candidate-
-    // generation shuffles (explode exchange, chain windows, pair distinct,
-    // focus window and join) are provably dead — everything below reads
-    // only the verified checkpoint, the features cache and the checkpointed
-    // state — so the state-update jobs and the next pass never sit on top
-    // of this pass's widest intermediate. A pass that verified no pair has
-    // no label graph: it plans no CC at all (an empty plan's probe under
-    // AQE could leave an abandoned shuffle stage running into the retire).
-    val comps = if (nVerified == 0) None else {
-      val la = rel.select(col("row_id").as("a"), col("cluster_id").as("la"))
-      val lb = rel.select(col("row_id").as("b"), col("cluster_id").as("lb"))
-      val labelEdges = verified.join(la, "a").join(lb, "b")
-        .where(col("la") =!= col("lb"))
-        .select(least(col("la"), col("lb")).as("a"), greatest(col("la"), col("lb")).as("b"))
-        .distinct()
-      Some(ConnectedComponents.components(spark, labelEdges, retire = retire,
-        inputNormalized = true))
-    }
-
-    if (comps.forall(ConnectedComponents.isEmpty)) {
-      // no cluster merges this pass — skip the state-update jobs entirely.
-      // (Documented divergence: intra-cluster score bumps from already-
-      // co-clustered verified pairs are dropped in this branch; they only
-      // shuffle rep ranking, and rank cycling explores reps regardless.)
-      graft.util.Checkpoints.unpersistCheckpoint(verified)
-      comps.foreach(graft.util.Checkpoints.unpersistCheckpoint)
-      (rel, PhaseStat("final", rounds.last, nVerified, prevClusters, prevSingles, 0.0))
-    } else {
-      // the driver path's remap is a LocalRelation the planner knows is
-      // small (it broadcasts it unhinted); a star-loop remap is unbounded
-      val remap = comps.get.where(col("row_id") =!= col("cluster_id"))
-        .select(col("row_id").as("cluster_id"), col("cluster_id").as("new_cluster_id"))
-      // the score delta is hinted only when its size is bounded; an
-      // unbounded hint bypasses Spark's broadcast safety (ADVICE)
-      val deltas = endpointCounts(verified).withColumnRenamed("score", "delta")
-      val deltasJ = if (deltasBroadcastable(nVerified)) broadcast(deltas) else deltas
-
-      // EAGER: materialize the new state while `verified` is still cached
-      // and BEFORE the superseded checkpoints are dropped below.
-      val next = rel
-        .join(remap, Seq("cluster_id"), "left")
-        .join(deltasJ, Seq("row_id"), "left")
-        .select(col("row_id"),
-          coalesce(col("new_cluster_id"), col("cluster_id")).as("cluster_id"),
-          (col("score") + coalesce(col("delta"), lit(0L))).as("score"))
-        .localCheckpoint()
-      val (clusters, singles) = clusterStats(next)
-      graft.util.Checkpoints.unpersistCheckpoint(verified)
-      // new state is materialized — free the superseded pass's checkpoint
-      // blocks NOW (driver GC would retain them for the whole run: the
-      // round-1 scale-killer that exhausted scratch disk at 8M+ rows)
-      graft.util.Checkpoints.unpersistCheckpoint(remap)
-      graft.util.Checkpoints.unpersistCheckpoint(rel)
-      val workRate =
-        if (prevSingles == 0) 0.0
-        else (prevSingles - singles).toDouble / prevSingles
-      (next, PhaseStat("final", rounds.last, nVerified, clusters, singles, workRate))
-    }
+    // only the small verified side shuffles here; small label graphs then
+    // union-find on the driver (the reference's own merge structure,
+    // :399-418) and large ones run the star loop. CC's retire after its
+    // probe is this pass's early retirement: with `verified` checkpointed,
+    // the pass's candidate-generation shuffles (explode exchange, chain
+    // windows, pair distinct, focus window and join) are provably dead, so
+    // the state-update jobs and the next pass never sit on top of this
+    // pass's widest intermediate.
+    val la = rel.select(col("row_id").as("a"), col("cluster_id").as("la"))
+    val lb = rel.select(col("row_id").as("b"), col("cluster_id").as("lb"))
+    val labels = verified.join(la, "a").join(lb, "b")
+      .where(col("la") =!= col("lb"))
+      .select(least(col("la"), col("lb")).as("a"), greatest(col("la"), col("lb")).as("b"))
+      .distinct()
+    val (next, clusters, singles) =
+      advance(spark, c, rel, verified, nVerified, labels, (prevClusters, prevSingles), retire)
+    val workRate =
+      if (prevSingles == 0) 0.0
+      else (prevSingles - singles).toDouble / prevSingles
+    (next, PhaseStat("final", rounds.last, nVerified, clusters, singles, workRate))
   }
 
   /** 1. Featurize -- bytes column pruned from the scan (SURVEY.md par.4).
@@ -616,10 +622,14 @@ object Pipeline {
       retire()
     }
 
+    // the identity state `parent[i] = i` (`:134`) that round 0 updates:
+    // every row its own cluster, score 0 — a projection of the features
+    // cache (so hash-partitioned on row_id), not a checkpoint
+    val rel0 = c.features.select(col("row_id"), col("row_id").as("cluster_id"), lit(0L).as("score"))
     var (rel, last, bad) = resume.getOrElse {
-      val (rel0, stat0) = timed(initialState(spark, c, cfg, retire))
-      commit(rel0, stat0, 0)
-      (rel0, stat0, 0)
+      val (first, stat0) = timed(initialState(spark, c, cfg, rel0, retire))
+      commit(first, stat0, 0)
+      (first, stat0, 0)
     }
     val ctl = RoundControl(cfg, c.n)
     var done = last.macroRound > 0 && ctl.stopped(bad, last.macroRound, last.workRate)
@@ -628,6 +638,11 @@ object Pipeline {
       val rounds = from until (from + ctl.passSize(from, bad, last.clusters))
       val (rel2, stat) = timed(
         macroStep(spark, c, rel, cfg, rounds, last.clusters, last.singles, retire))
+      // the new state is materialized: free the superseded one NOW (driver
+      // GC would retain its blocks for the whole run: the round-1 scale-
+      // killer that exhausted scratch disk at 8M+ rows) — unless it is the
+      // identity state, which the loop does not own (see [[advance]])
+      if ((rel2 ne rel) && (rel ne rel0)) graft.util.Checkpoints.unpersistCheckpoint(rel)
       val (nbad, stop) = ctl.stepPass(bad, rounds, last.singles, stat)
       commit(rel2, stat, nbad)
       rel = rel2; last = stat; bad = nbad; done = stop
@@ -635,7 +650,7 @@ object Pipeline {
 
     Result(
       rel.select("row_id", "cluster_id"),
-      // A6 divergence (documented at the zero-work branch in macroStep): a
+      // A6 divergence (documented at the zero-work branch in advance): a
       // row whose only verified pairs occur in merge-free passes keeps
       // score 0 and is absent here — downstream consumers get a slightly
       // sparser scores relation than a sequential per-round run would emit.

@@ -1,19 +1,8 @@
 package graft.model
 
-/** Core row types of the engine (SURVEY.md §1.2).
-  *
-  * The input table shape is fixed by the north rule (BASELINE.json
-  * `input_hint`): an Iceberg-style table of image + caption pairs.
-  */
-final case class ImageRow(
-    image_id: String,
-    bytes: Array[Byte],
-    w: Int,
-    h: Int,
-    fmt: String, // "png" | "jpg"
-    caption: String,
-    phash: Long
-)
+// Core row types of the engine (SURVEY.md §1.2). The input table shape is
+// fixed by the north rule (BASELINE.json `input_hint`): an Iceberg-style
+// table of image + caption pairs (SURVEY.md §1.1).
 
 /** Input row + the planted ground truth; the pipeline never sees
   * `true_cluster_id` (it is metric-only, mirroring the reference where truth
@@ -53,9 +42,10 @@ final case class GraftConfig(
     distanceThreshold: Int = 12,
     // NOTE: the reference's stricter chunk-phase verify thresholds
     // (0.32/0.28, ref :522) are intentionally NOT configured: the fused
-    // verify at sdHigh/sdLow (Pipeline.initialState) accepts a superset of
-    // what the chunk phase would, which is monotone/recall-safe — see the
-    // comment at the fused-verify site (VERDICT r2 #6 removed the dead knobs)
+    // verify at sdHigh/sdLow (round 0's batch loop in Pipeline) accepts a
+    // superset of what the chunk phase would, which is monotone/recall-safe
+    // — see the comment at the fused-verify site (VERDICT r2 #6 removed the
+    // dead knobs)
     sdHigh: Double = 0.25,         // :569
     sdLow: Double = 0.22,          // :570
     repsPerCluster: Int = 5,       // :110

@@ -34,11 +34,12 @@ import org.apache.spark.{MapOutputTrackerMaster, SparkContext}
   * therefore retires only when every still-live relation is either (a)
   * eagerly localCheckpoint'ed — lineage truncated, so no plan path through
   * a retired shuffle exists — or (b) backed solely by keep-set shuffles
-  * (the features cache). This holds at pass boundaries AND at the two
-  * mid-pass sites (the round-0 batch loop, and the label-graph CC's
-  * post-probe retire inside macroStep): `verified`, `identityEdges` and
-  * `repIds` are checkpoints, not persisted caches, precisely so those
-  * sites satisfy the contract (ADVICE r4).
+  * (the features cache, and round 0's identity state projected from it).
+  * This holds at pass boundaries AND at the two mid-pass sites (the
+  * round-0 batch loop, and CC's post-probe retire inside the state update
+  * `Pipeline.advance` that round 0 and every macro pass share): `verified`,
+  * `identityEdges` and `repIds` are checkpoints, not persisted caches,
+  * precisely so those sites satisfy the contract (ADVICE r4).
   *
   * Executor-loss caveat (real clusters): localCheckpoint blocks themselves
   * are not fault-tolerant — Spark documents that losing an executor loses

@@ -4,15 +4,16 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.graft.StageProfiler
 import org.apache.spark.scheduler.{JobSucceeded, SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.execution.LogicalRDD
 
-import graft.cluster.{CheckpointedPipeline, Pipeline}
+import graft.cluster.{CheckpointedPipeline, ConnectedComponents, Pipeline}
 import graft.gen.SyntheticCorpus
 import graft.io.TableIO
 import graft.model.GraftConfig
 
 /** Differential specs for the single driver loop: the in-memory and the
-  * ledger-backed entry points, and the two CC paths of the label-graph
-  * remap, must produce the same clustering pass for pass. Min-row_id
+  * ledger-backed entry points, the two CC paths and the round-0 batch
+  * counts must produce the same clustering pass for pass. Min-row_id
   * labels are canonical, so assignments compare exactly. */
 class DriverLoopSpec extends SparkSpec {
   import spark.implicits._
@@ -45,22 +46,54 @@ class DriverLoopSpec extends SparkSpec {
     assert(assignOf(durable) == assignOf(straight))
   }
 
-  test("label-graph remap through the star loop: driverUnionFindMaxEdges 0 gives the identical assign") {
-    // two band rounds and one chunk round leave round 0 incomplete, so the
-    // fixed macro passes merge clusters and the remap is non-empty
-    val cfg = GraftConfig(seed = 7L, bandRounds = 2, chunkRounds = 1, maxMacroRounds = 3)
+  test("round-0 grid: every CC cap and round0Batches cell gives identical outputs") {
+    // two band rounds and two chunk rounds leave round 0 incomplete, so the
+    // fixed macro passes merge clusters and the remap is non-empty; their
+    // four hash columns make four round-0 batches. A pair that collides in
+    // several batches verifies once per batch, so the scores are the probe
+    // of the cross-batch distinct, not the partition (CC ignores duplicate
+    // edges)
+    val cfg = GraftConfig(seed = 7L, bandRounds = 2, chunkRounds = 2, maxMacroRounds = 3)
     val images = spark.read.parquet(imagesPath)
-    val viaDriver = Pipeline.run(spark, images, cfg)
-    val statsDriver = viaDriver.stats.map(_.copy(seconds = 0.0))
-    assert(statsDriver.sliding(2).exists(p => p(1).macroRound > 0 && p(1).clusters < p(0).clusters),
-      s"no macro pass merged clusters: $statsDriver")
-    val assignDriver = assignOf(viaDriver)
-    spark.conf.set(capKey, "0")
+    val cells = for {
+      cap <- Seq("0", ConnectedComponents.DefaultDriverUnionFindMaxEdges.toString)
+      batches <- Seq(1, 4)
+    } yield withConf(capKey -> cap) {
+      val res = Pipeline.run(spark, images, cfg.copy(round0Batches = batches))
+      val scores = res.scores.as[(Long, Long)].collect().toMap
+      s"cap $cap, $batches batches" -> (res.stats.map(_.copy(seconds = 0.0)), scores, assignOf(res))
+    }
+    val (stats, scores, _) = cells.head._2
+    assert(stats.sliding(2).exists(p => p(1).macroRound > 0 && p(1).clusters < p(0).clusters),
+      s"no macro pass merged clusters: $stats")
+    // A6: each endpoint of a step's verified pairs scores 1, round 0's and
+    // those of every pass that merged; a pass that merges nothing keeps
+    // the state, its scores included
+    val merging = stats.head +: stats.sliding(2).collect {
+      case Seq(prev, s) if s.clusters < prev.clusters => s
+    }.toSeq
+    assert(scores.values.sum == 2 * merging.map(_.verifiedPairs).sum, stats)
+    for ((cell, got) <- cells.tail) assert(got == cells.head._2, cell)
+  }
+
+  test("identity state: a round 0 that merges nothing keeps it and frees no input") {
+    // one band round and no chunk round miss all three planted pairs of
+    // this corpus in round 0; the macro pass's fresh bands find them. That
+    // pass supersedes the identity state, a projection of the features
+    // cache whose plan reaches the caller's checkpoint, which the loop must
+    // not free
+    val images = SyntheticCorpus.imagesOf(SyntheticCorpus.generate(spark,
+      SyntheticCorpus.GenConfig(groups = 6, maxCopies = 2, seed = 1L))).localCheckpoint()
+    val input = images.queryExecution.analyzed.collectLeaves().collect { case r: LogicalRDD => r.rdd.id }
+    val n = images.count()
     try {
-      val viaStar = Pipeline.run(spark, images, cfg)
-      assert(viaStar.stats.map(_.copy(seconds = 0.0)) == statsDriver)
-      assert(assignOf(viaStar) == assignDriver)
-    } finally spark.conf.unset(capKey)
+      val res = Pipeline.run(spark, images, GraftConfig(seed = 7L, bandRounds = 1, chunkRounds = 0))
+      val stats = res.stats.map(_.copy(seconds = 0.0))
+      assert(assignOf(res).size == n)
+      assert(stats.head == Pipeline.PhaseStat("chunk+band", 0, 0, n, n, 1.0))
+      assert(stats.last.clusters < n, stats)
+      assert(input.size == 1 && spark.sparkContext.getPersistentRDDs.contains(input.head), input)
+    } finally graft.util.Checkpoints.unpersistCheckpoint(images)
   }
 
   test("shuffle partitions 1, 7 and 64 give the identical assign and every PhaseStat") {

@@ -78,11 +78,15 @@ class RoundControlSpec extends SparkSpec {
     // 4M-row broadcast cap on the RELATION (VERDICT r3 #3 — the old gate
     // `nVerified <= 2*cap` allowed a 16M-row broadcast)
     val cap = Pipeline.RepBroadcastMaxRows
-    assert(Pipeline.deltasBroadcastable(0L))
-    assert(Pipeline.deltasBroadcastable(cap / 2))       // 2·nV == cap: at the bound
-    assert(!Pipeline.deltasBroadcastable(cap / 2 + 1))  // one pair over: shuffle join
-    assert(!Pipeline.deltasBroadcastable(cap))          // old gate's region: rejected
-    assert(!Pipeline.deltasBroadcastable(2 * cap))
+    val n = 4 * cap // a state far larger than the cap
+    assert(Pipeline.deltasBroadcastable(0L, n))
+    assert(Pipeline.deltasBroadcastable(cap / 2, n))       // 2·nV == cap: at the bound
+    assert(!Pipeline.deltasBroadcastable(cap / 2 + 1, n))  // one pair over: shuffle join
+    assert(!Pipeline.deltasBroadcastable(cap, n))          // old gate's region: rejected
+    assert(!Pipeline.deltasBroadcastable(2 * cap, n))
+    // a bound as large as the state: the co-partitioned join needs no hint
+    assert(Pipeline.deltasBroadcastable(500L, 1000L))
+    assert(!Pipeline.deltasBroadcastable(501L, 1000L))
   }
 
   test("adversarial low-overlap corpus: adaptive budget beats the fixed work-rate-stopped budget") {

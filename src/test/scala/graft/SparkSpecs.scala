@@ -228,6 +228,25 @@ class ConnectedComponentsSpec extends SparkSpec {
       s"expected one retire per star-pair (>=2 on a 40-chain), got $retires")
   }
 
+  test("CC star loop on an edgeless graph runs no star round") {
+    // self-loops only (normalized away) and an empty inputNormalized input:
+    // the star loop's first signature finds no edge, so it returns an empty
+    // local result, which the pipeline's zero-work check reads with no job
+    val loops = Seq((1L, 1L), (2L, 2L)).toDF("a", "b")
+    for ((edges, normalized) <- Seq(loops -> false, loops.where("a < b") -> true)) {
+      var retires = 0
+      val comps = withDistributedCc {
+        ConnectedComponents.components(spark, edges, retire = () => retires += 1,
+          inputNormalized = normalized)
+      }
+      assert(comps.queryExecution.analyzed.collectLeaves() match {
+        case Seq(local: LocalRelation) => local.data.isEmpty
+        case _ => false
+      }, s"normalized=$normalized")
+      assert(retires == 0, s"normalized=$normalized")
+    }
+  }
+
   test("CC inputNormalized matches the oracle — and stays correct on contract breach") {
     val nodes = (0 until 60).map(i => Hashing.stable(i)).distinct
     val chain = nodes.sliding(2).map(s => (s(0), s(1))).toSeq
@@ -514,31 +533,6 @@ class PipelineSpec extends SparkSpec {
     val p1 = partitionOf(images)
     val p2 = partitionOf(images.repartition(17, col("caption")))
     assert(p1 == p2, "clustering changed under repartitioning")
-    gen.unpersist()
-  }
-
-  test("round-0 batching invariance: batched explode yields the same clustering AND scores") {
-    // a bucket never spans batches, so the unioned edge set — and the CC
-    // partition — must be IDENTICAL whatever the batch count (the disk-
-    // envelope knob must not be a semantics knob). Scores too (ADVICE r4):
-    // a pair that is a candidate in several batches verifies once per
-    // batch, and without the cross-batch distinct those duplicate edges
-    // inflate endpointCounts — so A6 scores are the sensitive probe here,
-    // not just the CC partition (which ignores duplicate edges).
-    val gen = SyntheticCorpus.generate(spark, SyntheticCorpus.GenConfig(groups = 60)).cache()
-    val images = SyntheticCorpus.imagesOf(gen)
-    def runOf(b: Int): (Set[Set[Long]], Map[Long, Long]) = {
-      import spark.implicits._
-      val res = Pipeline.run(spark, images, GraftConfig(seed = 7L, maxMacroRounds = 2,
-        round0Batches = b))
-      val part = res.assign.as[(Long, Long)].collect()
-        .groupBy(_._2).values.map(_.map(_._1).toSet).toSet
-      (part, res.scores.as[(Long, Long)].collect().toMap)
-    }
-    val (p1, s1) = runOf(1)
-    val (p3, s3) = runOf(3)
-    assert(p1 == p3, "clustering changed under round-0 batching")
-    assert(s1 == s3, "A6 scores changed under round-0 batching")
     gen.unpersist()
   }
 

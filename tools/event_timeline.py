@@ -2,25 +2,33 @@
 
     python3 tools/event_timeline.py <event log file or directory> [--jobs A-B ...]
 
-Reads an uncompressed Spark event log (``spark.eventLog.enabled=true``,
-``spark.eventLog.compress=false``; given a directory, the newest log in it)
-and prints one line per job: its start offset from the application start,
-its duration, the gap since the previous job ended (negative when the two
-overlap), the task count of every stage it ran (skipped stages are left
-out) and its call site (for a job AQE submits for one query stage, the call
-site of the query's action). A job whose result is not ``JobSucceeded`` is
-marked ``FAILED:`` with the first 120 characters of its message, and every
-stage that reports a failure reason is listed under its job. Each
-``--jobs A-B`` range (inclusive job ids)
-adds a summary line: span (first start to last end), busy (time with at
-least one of those jobs running), idle (span minus busy), and the summed
-executor run time and CPU time of their tasks. Standard library only.
+Reads a Spark event log (``spark.eventLog.enabled=true``; given a
+directory, the newest log in it). Spark 4 compresses event logs with zstd
+by default: a ``.zstd`` log is streamed through the ``zstd -dc``
+command-line tool, so it must be on ``PATH``; for a log in any other codec,
+rerun the application with ``spark.eventLog.compress=false``.
+
+The tool prints one line per job: its start offset from the application
+start, its duration, the gap since the previous job ended (negative when
+the two overlap), the task count of every stage it ran (skipped stages are
+left out) and its call site (for a job AQE submits for one query stage, the
+call site of the query's action). A job whose result is not
+``JobSucceeded`` is marked ``FAILED:`` with the first 120 characters of its
+message, and every stage that reports a failure reason is listed under its
+job. Each ``--jobs A-B`` range (inclusive job ids) adds a summary line:
+span (first start to last end), busy (time with at least one of those jobs
+running), idle (span minus busy), and the summed executor run time and CPU
+time of their tasks. Standard library only.
 """
 
 import argparse
 import json
 import pathlib
+import shutil
+import subprocess
 import sys
+
+CODECS = (".lz4", ".lzf", ".snappy", ".zstd")
 
 
 def log_files(path):
@@ -40,12 +48,31 @@ def log_files(path):
     return [p]
 
 
+def lines_of(p):
+    """The text lines of one event file; a ``.zstd`` file is decompressed by
+    the ``zstd`` CLI, and any other compressed file stops the tool."""
+    codec = next((c for c in CODECS if p.name.removesuffix(".inprogress").endswith(c)), None)
+    if codec is None:
+        with open(p, encoding="utf-8") as f:
+            yield from f
+        return
+    zstd = shutil.which("zstd") if codec == ".zstd" else None
+    if zstd is None:
+        need = "no zstd CLI on PATH" if codec == ".zstd" else "codec not supported"
+        sys.exit(f"{p}: {codec[1:]}-compressed event log ({need}); rerun with "
+                 "spark.eventLog.compress=false")
+    with subprocess.Popen([zstd, "-dcq", str(p)], stdout=subprocess.PIPE,
+                          encoding="utf-8") as proc:
+        yield from proc.stdout
+    if proc.returncode:
+        sys.exit(f"{p}: zstd -dc exited with {proc.returncode}")
+
+
 def read_events(path):
     for p in log_files(path):
-        with open(p) as f:
-            for line in f:
-                if line.strip():
-                    yield json.loads(line)
+        for line in lines_of(p):
+            if line.strip():
+                yield json.loads(line)
 
 
 class Job:
