@@ -46,8 +46,9 @@ class DriverLoopSpec extends SparkSpec {
     assert(assignOf(durable) == assignOf(straight))
   }
 
-  test("round-0 grid: every CC cap and round0Batches cell gives identical outputs") {
-    // two band rounds and two chunk rounds leave round 0 incomplete, so the
+  test("label-graph remap through the star loop: driverUnionFindMaxEdges 0 gives the identical assign") {
+    // a grid over round 0's paths: CC cap {0, default} x round0Batches {1, 4}.
+    // Two band rounds and two chunk rounds leave round 0 incomplete, so the
     // fixed macro passes merge clusters and the remap is non-empty; their
     // four hash columns make four round-0 batches. A pair that collides in
     // several batches verifies once per batch, so the scores are the probe

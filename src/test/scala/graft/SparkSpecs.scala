@@ -536,6 +536,31 @@ class PipelineSpec extends SparkSpec {
     gen.unpersist()
   }
 
+  test("round-0 batching invariance: batched explode yields the same clustering AND scores") {
+    // a bucket never spans batches, so the unioned edge set — and the CC
+    // partition — must be IDENTICAL whatever the batch count (the disk-
+    // envelope knob must not be a semantics knob). Scores too (ADVICE r4):
+    // a pair that is a candidate in several batches verifies once per
+    // batch, and without the cross-batch distinct those duplicate edges
+    // inflate endpointCounts — so A6 scores are the sensitive probe here,
+    // not just the CC partition (which ignores duplicate edges).
+    val gen = SyntheticCorpus.generate(spark, SyntheticCorpus.GenConfig(groups = 60)).cache()
+    val images = SyntheticCorpus.imagesOf(gen)
+    def runOf(b: Int): (Set[Set[Long]], Map[Long, Long]) = {
+      import spark.implicits._
+      val res = Pipeline.run(spark, images, GraftConfig(seed = 7L, maxMacroRounds = 2,
+        round0Batches = b))
+      val part = res.assign.as[(Long, Long)].collect()
+        .groupBy(_._2).values.map(_.map(_._1).toSet).toSet
+      (part, res.scores.as[(Long, Long)].collect().toMap)
+    }
+    val (p1, s1) = runOf(1)
+    val (p3, s3) = runOf(3)
+    assert(p1 == p3, "clustering changed under round-0 batching")
+    assert(s1 == s3, "A6 scores changed under round-0 batching")
+    gen.unpersist()
+  }
+
   test("focus equals the sizes-join oracle on random states: cluster sizes 1-50, tied scores, maxRank 0-4") {
     import spark.implicits._
     val rnd = new scala.util.Random(14)
