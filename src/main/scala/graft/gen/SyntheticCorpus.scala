@@ -283,4 +283,14 @@ object SyntheticCorpus {
       col("image_id"),
       col("true_cluster_id"))
   }
+
+  /** The same truth read back from `image_id` alone (`img-<group>-<copy>`,
+    * written by `genGroup`), for a corpus stored without its truth column. */
+  def truthOfIds(images: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions._
+    images.select(
+      graft.feat.RowIds.rowIdCol(col("image_id")).as("row_id"),
+      col("image_id"),
+      regexp_extract(col("image_id"), "img-(\\d+)-", 1).cast("long").as("true_cluster_id"))
+  }
 }

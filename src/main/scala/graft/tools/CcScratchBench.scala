@@ -3,7 +3,6 @@ package graft.tools
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.cluster.ConnectedComponents
@@ -47,18 +46,11 @@ object CcScratchBench {
       Paths.get(sys.props.getOrElse("spark.local.dir", sys.props("java.io.tmpdir"))
         .split(",").head.trim), "graft-cc-scratch").toFile
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-cc-scratch")
-      .config("spark.local.dir", scratchDir.getPath)
-      // mirror the ScalingBench production confs so the measured window
-      // matches what the pipeline's CC phase sees (incl. the round-7
-      // lean-heap storageFraction)
-      .config("spark.sql.shuffle.partitions", "256")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.io.compression.codec", "zstd")
-      .config("spark.memory.storageFraction", "0.2")
+    // the production session (graft.ScalingBench.session), so the measured
+    // window matches what the pipeline's CC phase sees, with three settings
+    // of this tool's own
+    val spark = graft.ScalingBench.session(cpus, "graft-cc-scratch",
+      "spark.local.dir" -> scratchDir.getPath,
       // NOT the pipeline's 2min: this tool retires explicitly after every
       // star pair, so the periodic driver GC adds nothing — and it is
       // actively dangerous here. Both 64M-node attempts on 2min died at
@@ -70,15 +62,11 @@ object CcScratchBench {
       // ("/tmp/blockmgr-…/rdd_3_… No such file or directory"). The
       // pipeline is immune (its caches live in Result and are unpersisted
       // explicitly); a microbench is exactly where the sharp edge shows.
-      .config("spark.cleaner.periodicGC.interval", "1h")
+      "spark.cleaner.periodicGC.interval" -> "1h",
       // this tool measures the DISTRIBUTED star loop's scratch: pin the
       // round-8 driver union-find fast path off so small invocations still
       // measure the loop they claim to
-      .config("spark.graft.cc.driverUnionFindMaxEdges", "0")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+      "spark.graft.cc.driverUnionFindMaxEdges" -> "0")
 
     // scratch sampler: summed size of every file under the run's own local
     // dir (files can vanish mid-walk: a gone file reads as 0 bytes)

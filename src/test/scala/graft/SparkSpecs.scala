@@ -502,6 +502,16 @@ class CorpusSpec extends SparkSpec {
     assert(a.map(r => java.util.Arrays.hashCode(r.bytes)).toSeq ==
       b.map(r => java.util.Arrays.hashCode(r.bytes)).toSeq)
   }
+
+  test("truth read back from image ids equals truthOf, mega group included") {
+    val gen = SyntheticCorpus.generate(spark, SyntheticCorpus.GenConfig(
+      groups = 40, megaGroupRows = 150, fastPayload = true))
+    val fromIds = SyntheticCorpus.truthOfIds(SyntheticCorpus.imagesOf(gen)).collect()
+    val truth = SyntheticCorpus.truthOf(gen).collect()
+    assert(truth.count(_.getLong(2) == 0L) == 150)
+    assert(fromIds.length == truth.length)
+    assert(fromIds.toSet == truth.toSet)
+  }
 }
 
 class PipelineSpec extends SparkSpec {
